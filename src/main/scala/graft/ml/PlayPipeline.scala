@@ -5,6 +5,7 @@ import org.apache.spark.ml.regression.GBTRegressor
 import org.apache.spark.ml.{Pipeline, PipelineModel}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The reference's core "query plan": a 3-stage Spark ML pipeline
   * (StringIndexer → VectorAssembler → GBTRegressor), one model per
@@ -50,13 +51,15 @@ object PlayPipeline {
   def train(plays: DataFrame): (PipelineModel, PipelineModel) = {
     val p = build()
     // 29k rows fit comfortably in memory; cache so the two fits and
-    // the indexer's frequency count don't rescan the source.
-    val cached = plays.cache()
+    // the indexer's frequency count don't rescan the source. A cache
+    // the caller already holds is theirs: use it, leave it in place.
+    val owned = plays.storageLevel == StorageLevel.NONE
+    val cached = if (owned) plays.cache() else plays
     try {
       val passModel = p.fit(cached.filter(col("PlayType") === "Pass"))
       val runModel = p.fit(cached.filter(col("PlayType") === "Run"))
       (passModel, runModel)
-    } finally cached.unpersist()
+    } finally if (owned) cached.unpersist()
   }
 
   def save(model: PipelineModel, path: String): Unit =

@@ -1,17 +1,25 @@
 package graft.serve
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import graft.SparkSpec
-import graft.ml.{Scorer, TestModels}
+import graft.ml.{PlayRequest, Scorer, TestModels}
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
+/** The HTTP surface over models fitted on the seeded in-repo plays.
+  * The recommended play is whatever the fitted models' argmax is, so
+  * responses are checked against `Scorer.scoreOne` (the transform
+  * path) on the same models; the reference's own argmax for the golden
+  * request is pinned in PlayPipelineSpec and RefModelLoadSpec. */
 class ScoringServerSpec extends SparkSpec {
 
+  private lazy val scorer = {
+    val models = TestModels.fixtureModels(spark)
+    new Scorer(spark, models._1, models._2)
+  }
   private lazy val server = {
-    val models = TestModels.models(spark)
-    val s = new ScoringServer(new Scorer(spark, models._1, models._2),
-      TestModels.plays(spark), port = 0)
+    val s = new ScoringServer(scorer, TestModels.fixturePlays(spark), port = 0)
     s.start()
     s
   }
@@ -30,11 +38,18 @@ class ScoringServerSpec extends SparkSpec {
   private val goldenJson =
     """{"qtr":3,"down":3,"TimeSecs":60,"yrdline100":50,"ydstogo":8,"ydsnet":15,
       |"month_day":920,"posteam":"PIT","DefensiveTeam":"NE","PlayType_lag":"Run"}""".stripMargin
+  private val golden = PlayRequest(qtr = 3, down = 3, TimeSecs = 60,
+    yrdline100 = 50, ydstogo = 8, ydsnet = 15, month_day = 920,
+    posteam = "PIT", DefensiveTeam = "NE", PlayType_lag = "Run")
 
   test("golden request returns the reference response shape with both yardages") {
     val r = post("/api", goldenJson)
     assert(r.statusCode() === 200)
-    assert(r.body().contains("\"best_play\":\"Running Play\""))
+    val want = scorer.scoreOne(golden)
+    val got = new ObjectMapper().readTree(r.body())
+    assert(got.get("best_play").asText() === want.bestPlay)
+    assert(got.get("passing_yards").asDouble() === want.passingYards)
+    assert(got.get("running_yards").asDouble() === want.runningYards)
     assert(r.body().contains("passing_yards") && r.body().contains("running_yards"))
   }
 
@@ -75,7 +90,10 @@ class ScoringServerSpec extends SparkSpec {
       "&month_day=920&posteam=PIT&DefensiveTeam=NE&PlayType_lag=Run"
     val scored = post("/?n=0", form)
     assert(scored.statusCode() === 200)
-    assert(scored.body().contains("<b>Running Play</b>"))
+    val want = scorer.scoreOne(golden)
+    assert(scored.body().contains(s"<b>${want.bestPlay}</b>"))
+    assert(scored.body().contains(f"""<span id="passing_yards">${want.passingYards}%.2f</span>""") &&
+      scored.body().contains(f"""<span id="running_yards">${want.runningYards}%.2f</span>"""))
     assert(scored.body().contains("id=\"passing_yards\"") &&
       scored.body().contains("id=\"running_yards\""))
     assert(scored.body().contains("href=\"/?n=1\"")) // cursor advanced

@@ -159,7 +159,7 @@ class StreamingSpec extends SparkSpec {
   test("resilient scoring retries transient sink failures and delivers every row") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val models = graft.ml.TestModels.models(spark)
+    val models = graft.ml.TestModels.fixtureModels(spark)
     val scorer = new graft.ml.Scorer(spark, models._1, models._2)
     val input = MemoryStream[(Int, Int, Int, Int, Int, Int, Int, String, String, String)]
     val plays = input.toDF().toDF("qtr", "down", "TimeSecs", "yrdline100",
@@ -190,7 +190,7 @@ class StreamingSpec extends SparkSpec {
   test("resilient scoring routes a poison batch to the dead letter and the stream survives") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val models = graft.ml.TestModels.models(spark)
+    val models = graft.ml.TestModels.fixtureModels(spark)
     val scorer = new graft.ml.Scorer(spark, models._1, models._2)
     val input = MemoryStream[(Int, Int, Int, Int, Int, Int, Int, String, String, String)]
     val plays = input.toDF().toDF("qtr", "down", "TimeSecs", "yrdline100",
@@ -231,7 +231,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming play scoring equals batch scoring of the same rows") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val models = graft.ml.TestModels.models(spark)
+    val models = graft.ml.TestModels.fixtureModels(spark)
     val scorer = new graft.ml.Scorer(spark, models._1, models._2)
 
     val input = MemoryStream[(Int, Int, Int, Int, Int, Int, Int, String, String, String)]
