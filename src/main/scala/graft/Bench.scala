@@ -208,15 +208,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the whole machine — the bench target is local[32]
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
     val streams = sys.env.getOrElse("SPARK_GRAFT_STREAMS", "16").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", math.max(cpus.toInt / 2, 4).toString)
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = GraftSession.builder(math.max(GraftSession.cpus / 2, 4))
       // NOTE: AQE's default size-based coalescing can squash a
       // byte-light / CPU-heavy stage (merge-walk jaccard verify:
       // 225k pairs ≈ 3.6 MB but seconds of CPU) to a handful of
@@ -227,9 +220,7 @@ object Bench {
       // tasks only add scheduler overhead (measured: +40% total
       // wall). Throughput mode keeps the default; single-query
       // deployments should lower minPartitionSize.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+      //
       // FAIR, not FIFO: concurrent streams each get a share of the
       // task slots, so an iterative query's many tiny jobs (CC rounds)
       // are not starved behind another stream's wide stages — the same

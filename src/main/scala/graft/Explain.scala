@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection main: prints `explain("formatted")` for the named
   * queries (or all) against a fixture dir — the loop used to keep
   * physical plans honest (pushed filters, broadcast joins, no stray
@@ -15,14 +13,9 @@ object Explain {
     val names =
       if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // fixed at 4 slots, not the host's: the printed plans must not
+    // depend on the machine they were dumped on
+    val spark = GraftSession.builder(4, cpus = 4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n━━━ $n ━━━")

@@ -3,7 +3,6 @@ package graft
 import graft.api.Graft
 import graft.functions.TextFunctions
 import graft.operators.PipelineOps
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end training-data pipeline — the engine as a product, one
@@ -28,15 +27,7 @@ object PipelineMain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = if (args.length > 1) args(1) else "target/pipeline-out"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", math.max(cpus.toInt / 2, 4).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(math.max(GraftSession.cpus / 2, 4)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Single-query profiler: runs one named query `reps` times against a
   * fixture dir and prints per-run wall time plus a per-stage duration
@@ -15,12 +14,7 @@ object Profile {
     val sfDir = args(0)
     val name = args(1)
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", math.max(cpus.toInt / 2, 4).toString)
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = GraftSession.builder(math.max(GraftSession.cpus / 2, 4))
       // AQE's size-based partition coalescing squashes byte-light but
       // CPU-heavy stages (merge-walk jaccard / cosine / levenshtein
       // verification over narrow candidate pairs) down to a handful of
@@ -28,10 +22,6 @@ object Profile {
       // minPartitionSize with parallelismFirst keeps such stages at
       // full parallelism while still coalescing genuinely tiny reads.
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

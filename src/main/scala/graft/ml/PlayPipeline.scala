@@ -66,4 +66,18 @@ object PlayPipeline {
     model.write.overwrite().save(path)
 
   def load(path: String): PipelineModel = PipelineModel.load(path)
+
+  /** The pass and run models saved under `modelDir`; when none are
+    * saved there, fit them on `plays` and save them there first.
+    * `plays` is only read when the models must be fitted. */
+  def loadOrTrain(modelDir: String, plays: => DataFrame): (PipelineModel, PipelineModel) = {
+    val (pass, run) = (s"$modelDir/nfl_model_pass", s"$modelDir/nfl_model_run")
+    if (new java.io.File(pass).isDirectory) (load(pass), load(run))
+    else {
+      val m = train(plays)
+      save(m._1, pass)
+      save(m._2, run)
+      m
+    }
+  }
 }

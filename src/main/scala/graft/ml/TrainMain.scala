@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** End-to-end training slice (SURVEY.md §7 minimum slice): read the
   * play-by-play CSV, derive features, fit the pass/run pipelines, save
@@ -16,14 +16,7 @@ object TrainMain {
   def main(args: Array[String]): Unit = {
     val csv = args.lift(0).getOrElse(DefaultCsv)
     val modelDir = args.lift(1).getOrElse("target/models")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-train")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(32).appName("graft-train").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val plays = PlayFeatures.derive(PlayFeatures.readCsv(spark, csv))

@@ -475,6 +475,7 @@ object Similarity {
     val dim = Option(fObs.get("dim")).collect {
       case x: java.lang.Integer => x.intValue()
       case x: java.lang.Long => x.intValue() }.getOrElse(0)
+    require(n > 0 && dim > 0, "empty embedding corpus")
     require(dim % m == 0, s"embedding dim $dim not divisible by m=$m")
     val dsub = dim / m
     // Fit parallelism derives from the BOUNDED train size, not the

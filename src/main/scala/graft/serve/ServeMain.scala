@@ -1,39 +1,24 @@
 package graft.serve
 
+import graft.GraftSession
 import graft.ml._
-import org.apache.spark.sql.SparkSession
 
 /** Start the scoring service: load (or train) the two models, start
-  * the HTTP server, print the bound port.
+  * the HTTP server, print the bound port. The play CSV feeds the
+  * replay table, and the training when no models are saved.
   *
-  * Usage: runMain graft.serve.ServeMain [modelDir] [port]
+  * Usage: runMain graft.serve.ServeMain [modelDir] [port] [csvPath]
   */
 object ServeMain {
   def main(args: Array[String]): Unit = {
     val modelDir = args.lift(0).getOrElse("target/models")
     val port = args.lift(1).map(_.toInt).getOrElse(4444)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-serve")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val csv = args.lift(2).getOrElse(TrainMain.DefaultCsv)
+    val spark = GraftSession.builder(8).appName("graft-serve").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val (passM, runM) =
-      if (new java.io.File(s"$modelDir/nfl_model_pass").isDirectory)
-        (PlayPipeline.load(s"$modelDir/nfl_model_pass"),
-          PlayPipeline.load(s"$modelDir/nfl_model_run"))
-      else {
-        val m = PlayPipeline.train(
-          PlayFeatures.derive(PlayFeatures.readCsv(spark, TrainMain.DefaultCsv)))
-        PlayPipeline.save(m._1, s"$modelDir/nfl_model_pass")
-        PlayPipeline.save(m._2, s"$modelDir/nfl_model_run")
-        m
-      }
-    val plays = PlayFeatures.derive(PlayFeatures.readCsv(spark, TrainMain.DefaultCsv))
+    val plays = PlayFeatures.derive(PlayFeatures.readCsv(spark, csv))
+    val (passM, runM) = PlayPipeline.loadOrTrain(modelDir, plays)
     val server = new ScoringServer(new Scorer(spark, passM, runM), plays, port)
     server.start()
     println(s"SERVING port=${server.boundPort}")

@@ -1,36 +1,26 @@
 package graft.streaming
 
+import graft.GraftSession
 import graft.ml.{PlayFeatures, PlayPipeline, Scorer, TrainMain}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
 /** Runnable streaming demo: rate-source play simulator (NiFi-equivalent
   * event synthesis) scored micro-batch-wise for ~10 seconds.
   *
-  * Usage: runMain graft.streaming.StreamMain [modelDir] [seconds]
+  * Usage: runMain graft.streaming.StreamMain [modelDir] [seconds] [csvPath]
   * Loads saved models from modelDir if present (TrainMain writes
-  * target/models), else trains first.
+  * target/models), else trains them on the play CSV and saves them.
   */
 object StreamMain {
   def main(args: Array[String]): Unit = {
     val modelDir = args.lift(0).getOrElse("target/models")
     val seconds = args.lift(1).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-stream")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val csv = args.lift(2).getOrElse(TrainMain.DefaultCsv)
+    val spark = GraftSession.builder(8).appName("graft-stream").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val (passM, runM) =
-      if (new java.io.File(s"$modelDir/nfl_model_pass").isDirectory)
-        (PlayPipeline.load(s"$modelDir/nfl_model_pass"),
-          PlayPipeline.load(s"$modelDir/nfl_model_run"))
-      else PlayPipeline.train(
-        PlayFeatures.derive(PlayFeatures.readCsv(spark, TrainMain.DefaultCsv)))
+    val (passM, runM) = PlayPipeline.loadOrTrain(modelDir,
+      PlayFeatures.derive(PlayFeatures.readCsv(spark, csv)))
     val scorer = new Scorer(spark, passM, runM)
 
     var scoredTotal = 0L

@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.operators.{Dedup, Graph}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Engine-side equality check for the delete-capable CC increment at
@@ -14,17 +13,7 @@ import org.apache.spark.sql.functions._
 object CcRetractScaleCheck {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: CcRetractScaleCheck <sfDir> [<sfDir> ...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.expr.GraftFunctions.register(spark)
     import spark.implicits._

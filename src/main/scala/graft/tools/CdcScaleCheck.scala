@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.operators.Cdc
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The q166 diff→log→apply closure proven at GENERATED scale on
@@ -28,17 +27,7 @@ object CdcScaleCheck {
     require(args.nonEmpty, "usage: CdcScaleCheck <sfDir> [cutoff-date]")
     val dir = args(0)
     val cutoff = if (args.length > 1) args(1) else "2024-01-15"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Tables.warmLayout(spark, dir)
     val t = Tables(spark, dir)

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.{SparkEntry, Tables}
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry, Tables}
 
 /** Sequential solo-latency bench for cross-SF scaling sweeps.
   *
@@ -27,21 +26,12 @@ object ScaleBench {
     val passes = if (args.length > 2) args(2).toInt else 3
     val unknown = names.toSet -- SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown queries: $unknown")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = GraftSession.builder(GraftSession.cpus)
       // solo runs want the CPU-dense byte-light stages (jaccard
       // verify) spread across cores, not AQE-coalesced to a few
       // tasks — the single-query deployment setting (see Bench's
       // note on why the 16-stream lane keeps the default)
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Tables.warmLayout(spark, sfDir)

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.GraftSession
 import graft.ml.{PlayFeatures, PlayPipeline, Scorer, TrainMain}
 import graft.streaming.{PlayStream, StreamDedup}
 import org.apache.spark.sql.SparkSession
@@ -45,15 +46,7 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val secs = args.filterNot(_.startsWith("--")).headOption.map(_.toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "8") // streaming state: small per-batch shuffles
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val builder = GraftSession.builder(8) // streaming state: small per-batch shuffles
     if (args.contains("--rocksdb")) {
       builder.config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")

@@ -10,6 +10,19 @@ class AnnIndexSpec extends SparkSpec {
 
   private def emb = sf001.embeddings.select(col("vec_id"), col("embedding"))
 
+  test("an empty embedding corpus fails fast, naming the empty corpus") {
+    import spark.implicits._
+    val empty = emb.filter(lit(false))
+    val viaProbe = intercept[IllegalArgumentException] {
+      Similarity.annPqOver(empty, $"vec_id", $"embedding", _ < 5).collect()
+    }
+    assert(viaProbe.getMessage.contains("empty embedding corpus"))
+    val viaIndex = intercept[IllegalArgumentException] {
+      Similarity.buildAnnIndex(empty, $"vec_id", $"embedding", "graft_test_ann_empty")
+    }
+    assert(viaIndex.getMessage.contains("empty embedding corpus"))
+  }
+
   test("probe from the persisted index equals the in-memory IVF-PQ path") {
     import spark.implicits._
     Similarity.buildAnnIndex(sf001.embeddings, $"vec_id", $"embedding",
