@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.State
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Bucketed-storage co-located joins — the storage-layout half of the
@@ -49,31 +50,18 @@ object Bucketing {
     * ingest-side layout cost the co-located join amortizes. Table
     * names embed the fixture fingerprint so a regenerated fixture
     * rewrites instead of serving stale buckets. */
-  private val laidOut = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String), (String, String)]()
   private def bucketedTables(t: graft.Tables, buckets: Int): (String, String) = {
-    val fp = Integer.toHexString(
-      (graft.Tables.parallelLayout(t.spark, t.dir, "lineitem") + "|" +
-        graft.Tables.parallelLayout(t.spark, t.dir, "orders")).hashCode)
-    laidOut.computeIfAbsent((t.spark.sparkContext, fp), _ => {
+    val li = State.name(t, "bkt_lineitem", "lineitem", "orders")
+    val or = State.name(t, "bkt_orders", "lineitem", "orders")
+    State.memo(t.spark.sparkContext, li) {
       import t.spark.implicits._
-      val li = s"graft_bkt_lineitem_$fp"
-      val or = s"graft_bkt_orders_$fp"
-      // a PREVIOUS JVM's warehouse dir survives while the in-memory
-      // catalog does not — drop both the entry and any orphaned
-      // location, or saveAsTable refuses the managed-table name
-      Seq(li, or).foreach { name =>
-        t.spark.sql(s"DROP TABLE IF EXISTS $name")
-        val wh = t.spark.conf.get("spark.sql.warehouse.dir")
-          .stripPrefix("file:")
-        graft.Tables.deleteRec(new java.io.File(wh, name))
-      }
+      State.dropTables(t.spark, li, or)
       writeBucketed(t.lineitem.select($"l_orderkey", $"l_extendedprice",
         $"l_discount"), li, "l_orderkey", buckets)
       writeBucketed(t.orders.select($"o_orderkey", $"o_orderpriority"),
         or, "o_orderkey", buckets)
       (li, or)
-    })
+    }
   }
 
   /** The co-located fact-fact join frame (pre-aggregation): both

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{State, Tables}
 import graft.functions.TextFunctions._
 import org.apache.spark.ml.feature.{HashingTF, MinHashLSH}
 import org.apache.spark.sql.DataFrame
@@ -240,12 +240,8 @@ object Dedup {
       textCol: org.apache.spark.sql.Column, prefix: String,
       maxDist: Double = 0.4, bands: Int = 16, rowsPerBand: Int = 2,
       shingleK: Int = 3, buckets: Int = 8): Unit = {
-    val spark = docs.sparkSession
-    Seq(s"${prefix}_docs", s"${prefix}_bands", s"${prefix}_pairs").foreach { n =>
-      spark.sql(s"DROP TABLE IF EXISTS $n")
-      val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-      graft.Tables.deleteRec(new java.io.File(wh, n))
-    }
+    State.dropTables(docs.sparkSession,
+      s"${prefix}_docs", s"${prefix}_bands", s"${prefix}_pairs")
     val d = shingledDocs(docs, idCol, textCol, shingleK).localCheckpoint(true)
     d.select(col("doc_id"), col("shh"))
       .repartition(buckets, col("doc_id")).write.bucketBy(buckets, "doc_id").sortBy("doc_id")
@@ -319,12 +315,8 @@ object Dedup {
       shingleK: Int = 3, buckets: Int = 8): Unit = {
     require(outPrefix != prefix, "write the updated index under a new prefix")
     val spark = delta.sparkSession
-    Seq(s"${outPrefix}_docs", s"${outPrefix}_bands", s"${outPrefix}_pairs")
-      .foreach { n =>
-        spark.sql(s"DROP TABLE IF EXISTS $n")
-        val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-        graft.Tables.deleteRec(new java.io.File(wh, n))
-      }
+    State.dropTables(spark,
+      s"${outPrefix}_docs", s"${outPrefix}_bands", s"${outPrefix}_pairs")
     val dd = shingledDocs(delta, idCol, textCol, shingleK).localCheckpoint(true)
     spark.table(s"${prefix}_docs")
       .unionByName(dd.select(col("doc_id"), col("shh")))
@@ -389,12 +381,8 @@ object Dedup {
       maxDist: Double = 0.4, bands: Int = 16, rowsPerBand: Int = 2,
       shingleK: Int = 3, buckets: Int = 8): Unit = {
     val spark = docs.sparkSession
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    Seq(s"${prefix}_docs", s"${prefix}_bands", s"${prefix}_pairs",
-        s"${prefix}_clusters").foreach { n =>
-      spark.sql(s"DROP TABLE IF EXISTS $n")
-      graft.Tables.deleteRec(new java.io.File(wh, n))
-    }
+    State.dropTables(spark, s"${prefix}_docs", s"${prefix}_bands",
+      s"${prefix}_pairs", s"${prefix}_clusters")
     val d = shingledDocs(docs, idCol, textCol, shingleK).localCheckpoint(true)
     d.select(col("doc_id"), col("shh"))
       .repartition(buckets, col("doc_id")).write.bucketBy(buckets, "doc_id").sortBy("doc_id")
@@ -456,12 +444,8 @@ object Dedup {
       .union(minhashPairsCore(delta, idCol, textCol, maxDist, bands,
         rowsPerBand, shingleK).select(col("id_a"), col("id_b")))
       .localCheckpoint(true)
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    Seq(s"${outPrefix}_docs", s"${outPrefix}_bands", s"${outPrefix}_pairs",
-        s"${outPrefix}_clusters").foreach { n =>
-      spark.sql(s"DROP TABLE IF EXISTS $n")
-      graft.Tables.deleteRec(new java.io.File(wh, n))
-    }
+    State.dropTables(spark, s"${outPrefix}_docs", s"${outPrefix}_bands",
+      s"${outPrefix}_pairs", s"${outPrefix}_clusters")
     spark.table(s"${prefix}_docs")
       .unionByName(dd.select(col("doc_id"), col("shh")))
       .repartition(buckets, col("doc_id")).write.bucketBy(buckets, "doc_id").sortBy("doc_id")
@@ -495,20 +479,14 @@ object Dedup {
     // both counts ride their frame's materialization job via observe()
     // (the connectedComponents recipe — two fewer driver jobs on a
     // latency-bound fold)
-    val delObs = org.apache.spark.sql.Observation()
-    val del = deleteIds.select(col(deleteIds.columns.head).as("doc_id"))
-      .distinct().observe(delObs, count(lit(1)).as("n"))
-      .localCheckpoint(true)
-    val nDel = Option(delObs.get("n")).collect {
-      case n: java.lang.Long => n.longValue() }.getOrElse(0L)
+    val (del, nDel) = State.checkpointCounted(
+      deleteIds.select(col(deleteIds.columns.head).as("doc_id")).distinct(),
+      count(lit(1)))
     // each delete's cluster off the bucketed labeling — the small side
     // broadcasts; the matched rows are delta-bounded
-    val mObs = org.apache.spark.sql.Observation()
-    val matched = clusters.join(broadcast(del), Seq("doc_id"))
-      .select(col("cluster")).observe(mObs, count(lit(1)).as("n"))
-      .localCheckpoint(true)
-    val nMatched = Option(mObs.get("n")).collect {
-      case n: java.lang.Long => n.longValue() }.getOrElse(0L)
+    val (matched, nMatched) = State.checkpointCounted(
+      clusters.join(broadcast(del), Seq("doc_id")).select(col("cluster")),
+      count(lit(1)))
     if (nMatched != nDel)
       throw new IllegalArgumentException(
         s"Dedup.dedupApplyDeletes: ${nDel - nMatched} of $nDel deletes "
@@ -551,12 +529,8 @@ object Dedup {
     val labels = dedupApplyDeletes(deleteIds, prefix).localCheckpoint(true)
     val del = deleteIds.select(col(deleteIds.columns.head).as("doc_id"))
       .distinct().localCheckpoint(true)
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    Seq(s"${outPrefix}_docs", s"${outPrefix}_bands", s"${outPrefix}_pairs",
-        s"${outPrefix}_clusters").foreach { n =>
-      spark.sql(s"DROP TABLE IF EXISTS $n")
-      graft.Tables.deleteRec(new java.io.File(wh, n))
-    }
+    State.dropTables(spark, s"${outPrefix}_docs", s"${outPrefix}_bands",
+      s"${outPrefix}_pairs", s"${outPrefix}_clusters")
     spark.table(s"${prefix}_docs")
       .join(broadcast(del), Seq("doc_id"), "left_anti")
       .repartition(buckets, col("doc_id")).write.bucketBy(buckets, "doc_id").sortBy("doc_id")
@@ -587,19 +561,12 @@ object Dedup {
     * clustering covers the survivors and must hash-equal q103's
     * from-scratch closure over exactly the surviving corpus — blind
     * to the engine's state/delete split. */
-  private val dedupFullBuilt = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String), String]()
   def dedupDeleteClusters(t: Tables, maxDist: Double = 0.4): DataFrame = {
     import t.spark.implicits._
     val isDel = ($"doc_id" % 13) === 5
-    val fp = Integer.toHexString(
-      graft.Tables.parallelLayout(t.spark, t.dir, "documents").hashCode)
-    val prefix = dedupFullBuilt.computeIfAbsent(
-      (t.spark.sparkContext, fp), _ => {
-        val p = s"graft_dedupf_idx_$fp"
-        buildDedupIndexFull(t.documents, $"doc_id", $"text", p, maxDist)
-        p
-      })
+    val prefix = State.ensure(t, "dedupf_idx", "documents") {
+      buildDedupIndexFull(t.documents, $"doc_id", $"text", _, maxDist)
+    }
     dedupApplyDeletes(t.documents.filter(isDel).select($"doc_id"), prefix)
       .orderBy($"doc_id")
   }
@@ -609,20 +576,12 @@ object Dedup {
     * fingerprint, the q116 recipe), the 10% delta deduped against it.
     * The emitted clustering covers the UNION and must hash-equal
     * q103's from-scratch closure over the whole table. */
-  private val dedupIdxBuilt = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String), String]()
   def incrementalDedupClusters(t: Tables, maxDist: Double = 0.4): DataFrame = {
     import t.spark.implicits._
     val isDelta = ($"doc_id" % 10) === 0
-    val fp = Integer.toHexString(
-      graft.Tables.parallelLayout(t.spark, t.dir, "documents").hashCode)
-    val prefix = dedupIdxBuilt.computeIfAbsent(
-      (t.spark.sparkContext, fp), _ => {
-        val p = s"graft_dedup_idx_$fp"
-        buildDedupIndex(t.documents.filter(!isDelta), $"doc_id", $"text",
-          p, maxDist)
-        p
-      })
+    val prefix = State.ensure(t, "dedup_idx", "documents") {
+      buildDedupIndex(t.documents.filter(!isDelta), $"doc_id", $"text", _, maxDist)
+    }
     dedupIncrementalOver(t.documents.filter(isDelta), $"doc_id", $"text",
       prefix, maxDist)
       .orderBy($"doc_id")
@@ -1152,12 +1111,8 @@ object Dedup {
     // the lineage cut, the planner no longer sees a size estimate, so
     // the small-graph broadcast that cached stats used to enable is
     // re-established explicitly, from a measured count.
-    val symObs = org.apache.spark.sql.Observation()
-    val sym = symChecked.distinct()
-      .observe(symObs, count(lit(1)).as("n"))
-      .localCheckpoint(true)
-    val nSym = Option(symObs.get("n")).collect {
-      case n: java.lang.Long => n.longValue() }.getOrElse(Long.MaxValue)
+    val (sym, nSym) = State.checkpointCounted(symChecked.distinct(),
+      count(lit(1)), ifNone = Long.MaxValue)
     // per-round probe side: ~24 B/row of (src, dst) longs ⇒ 2M rows
     // stay well inside the default 10 MB auto-broadcast budget; bigger
     // edge sets shuffle (sort-merge/shuffled-hash), exactly as the
@@ -1169,59 +1124,56 @@ object Dedup {
     val connected = sym.select(col("src").as("id")).distinct()
     var labels = connected.withColumn("component", col("id"))
       .localCheckpoint(true)
-      var changed = 1L
-      var iter = 0
-      while (changed > 0) {
-        // throws only while labels are STILL changing at the budget; a
-        // zero-change confirmation round is required beyond the last
-        // productive one, so graphs of diameter < maxIters always pass
-        if (iter >= maxIters)
-          throw new IllegalStateException(
-            s"connectedComponents did not converge in $maxIters rounds " +
-              s"($changed labels still changing) — raise maxIters (rounds ≈ graph diameter)")
-        // one round = TWO shuffles, not three: neighbor contributions
-        // (label pushed across each edge) are unioned with the node's
-        // own label and min-folded in a single groupBy — replacing the
-        // separate neighbor-min aggregation + left-join-update. tag=0
-        // marks the node's own label so the fold can detect change
-        // (new component < old) in the same pass.
-        val contrib = symJ
-          .join(labels.select(col("id").as("dst"), col("component").as("nl")), "dst")
-          .select(col("src").as("id"), col("nl").as("cand"), lit(1).as("tag"))
-        // the convergence metric rides the checkpoint materialization
-        // job via observe() — ONE job per round, not a checkpoint job
-        // plus a separate count()
-        val obs = org.apache.spark.sql.Observation()
-        val updated = labels
-          .select(col("id"), col("component").as("cand"), lit(0).as("tag"))
-          .unionAll(contrib)
-          .groupBy(col("id"))
-          .agg(min(col("cand")).as("component"),
-            (min(col("cand")) < min(when(col("tag") === 0, col("cand")))).as("chg"))
-          .observe(obs, sum(col("chg").cast("long")).as("n_changed"))
+    var changed = 1L
+    var iter = 0
+    while (changed > 0) {
+      // throws only while labels are STILL changing at the budget; a
+      // zero-change confirmation round is required beyond the last
+      // productive one, so graphs of diameter < maxIters always pass
+      if (iter >= maxIters)
+        throw new IllegalStateException(
+          s"connectedComponents did not converge in $maxIters rounds " +
+            s"($changed labels still changing) — raise maxIters (rounds ≈ graph diameter)")
+      // one round = TWO shuffles, not three: neighbor contributions
+      // (label pushed across each edge) are unioned with the node's
+      // own label and min-folded in a single groupBy — replacing the
+      // separate neighbor-min aggregation + left-join-update. tag=0
+      // marks the node's own label so the fold can detect change
+      // (new component < old) in the same pass.
+      val contrib = symJ
+        .join(labels.select(col("id").as("dst"), col("component").as("nl")), "dst")
+        .select(col("src").as("id"), col("nl").as("cand"), lit(1).as("tag"))
+      // the convergence metric rides the checkpoint materialization
+      // job via observe() — ONE job per round, not a checkpoint job
+      // plus a separate count()
+      val (updated, nChanged) = State.checkpointCounted(labels
+        .select(col("id"), col("component").as("cand"), lit(0).as("tag"))
+        .unionAll(contrib)
+        .groupBy(col("id"))
+        .agg(min(col("cand")).as("component"),
+          (min(col("cand")) < min(when(col("tag") === 0, col("cand")))).as("chg")),
+        sum(col("chg").cast("long")))
+      changed = nChanged
+      val prop = updated.select(col("id"), col("component"))
+      // pointer jumping from round 2 (see scaladoc): component
+      // values are themselves connected-node ids, so remapping
+      // through the fresh labels is a self-join; left + coalesce is
+      // belt-and-braces (every component value matches an id)
+      labels =
+        if (iter < 2 || changed == 0) prop
+        else prop
+          .join(prop.select(col("id").as("component"), col("component").as("c2")),
+            Seq("component"), "left")
+          .select(col("id"), coalesce(col("c2"), col("component")).as("component"))
           .localCheckpoint(true)
-        changed = Option(obs.get("n_changed")).collect {
-          case n: java.lang.Long => n.longValue() }.getOrElse(0L)
-        val prop = updated.select(col("id"), col("component"))
-        // pointer jumping from round 2 (see scaladoc): component
-        // values are themselves connected-node ids, so remapping
-        // through the fresh labels is a self-join; left + coalesce is
-        // belt-and-braces (every component value matches an id)
-        labels =
-          if (iter < 2 || changed == 0) prop
-          else prop
-            .join(prop.select(col("id").as("component"), col("component").as("c2")),
-              Seq("component"), "left")
-            .select(col("id"), coalesce(col("c2"), col("component")).as("component"))
-            .localCheckpoint(true)
-        iter += 1
-      }
-      if (sys.env.contains("GRAFT_DEBUG"))
-        System.err.println(s"[cc] converged in $iter rounds")
-      val isolated = nodeIds
-        .join(labels.select(col("id")), Seq("id"), "left_anti")
-        .withColumn("component", col("id"))
-      labels.union(isolated)
+      iter += 1
+    }
+    if (sys.env.contains("GRAFT_DEBUG"))
+      System.err.println(s"[cc] converged in $iter rounds")
+    val isolated = nodeIds
+      .join(labels.select(col("id")), Seq("id"), "left_anti")
+      .withColumn("component", col("id"))
+    labels.union(isolated)
   }
 
   /** Near-dup clusters over the blocked jaccard pairs (q26's pair

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{State, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -187,14 +187,11 @@ object Graph {
   private def prepSsspEdges(edges: DataFrame, srcCol: Column, dstCol: Column,
       wCol: Column,
       edgeStorage: org.apache.spark.storage.StorageLevel): (DataFrame, Long) = {
-    val obs = org.apache.spark.sql.Observation()
-    val e = edges.select(srcCol.as("src"), dstCol.as("dst"), wCol.cast("long").as("w"))
-      .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w"))
-      .repartition(col("src"))
-      .observe(obs, min(col("w")).as("min_w"))
-      .localCheckpoint(true, edgeStorage)
-    (e, Option(obs.get("min_w")).collect {
-      case n: java.lang.Long => n.longValue() }.getOrElse(Long.MaxValue))
+    State.checkpointCounted(
+      edges.select(srcCol.as("src"), dstCol.as("dst"), wCol.cast("long").as("w"))
+        .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w"))
+        .repartition(col("src")),
+      min(col("w")), ifNone = Long.MaxValue, storage = edgeStorage)
   }
 
   /** All nodes, sources at 0, everything else NULL (unreached). */
@@ -251,13 +248,9 @@ object Graph {
       // job per round, replacing a node-scale self-join + count job
       // (the connectedComponents recipe; round-latency is the whole
       // wall of these driver loops)
-      val obs = org.apache.spark.sql.Observation()
-      val next = ssspRound(e, dist)
-        .observe(obs, sum(col("chg")).as("n_changed"))
-        .select(col("id"), col("dist"))
-        .localCheckpoint(true)
-      changed = Option(obs.get("n_changed")).collect {
-        case n: java.lang.Long => n.longValue() }.getOrElse(0L)
+      val (next, n) = State.checkpointCounted(ssspRound(e, dist),
+        sum(col("chg")), keep = Seq("id", "dist"))
+      changed = n
       dist = next
       rounds += 1
     }
@@ -777,32 +770,21 @@ object Graph {
     // one scan: full degrees (src covers every node — e carries both
     // directions), map-side combined to node scale; the node count
     // rides the checkpoint job via observe() (no standalone count)
-    val n0Obs = org.apache.spark.sql.Observation()
-    val deg0 = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-      .observe(n0Obs, count(lit(1)).as("n"))
-      .localCheckpoint(true)
-    val n0 = Option(n0Obs.get("n")).collect {
-      case n: java.lang.Long => n.longValue() }.getOrElse(0L)
+    val (deg0, n0) = State.checkpointCounted(
+      e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg")), count(lit(1)))
     val k = kOf(deg0)
     require(k >= 1, s"k must be >= 1: $k")
     // round 1 IS the full-degree filter; the survivor count rides the
     // checkpoint job via observe() (the connectedComponents/SSSP
     // recipe — one job per round, no separate count action)
-    def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val out = df.observe(obs, count(lit(1)).as("n_rows"))
-        .localCheckpoint(true)
-      (out, Option(obs.get("n_rows")).collect {
-        case n: java.lang.Long => n.longValue() }.getOrElse(0L))
-    }
-    var (core, n) = checkpointCounted(deg0.filter(col("deg") >= k))
+    var (core, n) = State.checkpointCounted(deg0.filter(col("deg") >= k), count(lit(1)))
     var rounds = 1
     var converged = n == n0
     while (!converged && rounds < maxIters) {
       val alive = core.select(col("id"))
       val deg = e.join(alive, e("dst") === alive("id"), "left_semi")
         .groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-      val (next, m) = checkpointCounted(deg.filter(col("deg") >= k))
+      val (next, m) = State.checkpointCounted(deg.filter(col("deg") >= k), count(lit(1)))
       // alive only shrinks and next ⊆ alive, so equal counts = equal
       // sets = fixpoint; next's degrees were computed against an
       // alive set equal to the final one — they ARE the core degrees
@@ -905,13 +887,7 @@ object Graph {
     // replacing each follow-up count job (and the forward loop's
     // node-scale self-join + count) with an in-pass observation
     // halves the job count per round
-    def ckptObs(df: DataFrame, metric: Column): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val out = df.observe(obs, metric.as("m")).localCheckpoint(true)
-      (out, Option(obs.get("m")).collect {
-        case n: java.lang.Long => n.longValue() }.getOrElse(0L))
-    }
-    var (remaining, remN) = ckptObs(
+    var (remaining, remN) = State.checkpointCounted(
       eRem.select(col("src").as("id"))
         .union(eRem.select(col("dst").as("id"))).distinct(),
       count(lit(1)))
@@ -935,7 +911,7 @@ object Graph {
           .groupBy(col("dst")).agg(min(col("color")).as("nc"))
         // the changed-count (nc improves the color ⟺ the joined row's
         // new color differs) rides the checkpoint job
-        val (next, c) = ckptObs(
+        val (next, c) = State.checkpointCounted(
           st.join(contrib, st("id") === contrib("dst"), "left")
             .select(st("id"), least(col("color"), col("nc")).as("color"),
               (col("nc").isNotNull && col("nc") < st("color"))
@@ -949,7 +925,7 @@ object Graph {
         s"SCC forward coloring did not converge within $maxRounds rounds")
       // 2. backward in-class marking fixpoint (roots start marked);
       // the marked-count observation rides each checkpoint
-      var (stm, marked) = ckptObs(
+      var (stm, marked) = State.checkpointCounted(
         st.select(col("id"), col("color"),
           (col("id") === col("color")).as("mark")),
         sum(col("mark").cast("long")))
@@ -958,7 +934,7 @@ object Graph {
       while (grew && r < maxRounds) {
         val cand = eDst.join(stm.filter(col("mark")), eDst("dst") === stm("id"))
           .select(col("src").as("cid"), col("color").as("c2")).distinct()
-        val (next, m2) = ckptObs(
+        val (next, m2) = State.checkpointCounted(
           stm.join(cand,
               stm("id") === cand("cid") && stm("color") === cand("c2"), "left")
             .select(stm("id"), stm("color"),
@@ -975,7 +951,7 @@ object Graph {
       val found = stm.filter(col("mark")).select(col("id"), col("color").as("scc"))
       assigned = Some(assigned.fold(found)(_.unionByName(found))
         .localCheckpoint(true))
-      val (rem2, rn2) = ckptObs(
+      val (rem2, rn2) = State.checkpointCounted(
         stm.filter(!col("mark")).select(col("id")), count(lit(1)))
       remaining = rem2
       remN = rn2
@@ -1044,10 +1020,7 @@ object Graph {
     * join reads without exchanging the state. */
   def buildCcState(nodes: DataFrame, edges: DataFrame, table: String,
       buckets: Int = 8): Unit = {
-    val spark = nodes.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    graft.Tables.deleteRec(new java.io.File(wh, table))
+    State.dropTables(nodes.sparkSession, table)
     Dedup.connectedComponents(nodes, edges)
       .repartition(buckets, col("component")).write.bucketBy(buckets, "component").sortBy("component", "id")
       .saveAsTable(table)
@@ -1102,25 +1075,16 @@ object Graph {
     * (a+b) mod 5 ≠ 0), the remaining edges fold in as an insert
     * batch at query time. Must hash-equal the oracle's from-scratch
     * transitive closure over ALL edges (every customer labeled; the
-    * isolated ones are their own component). */
-  private val ccBuilt = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String), String]()
-
-  /** The memoized q202 base labeling (edges with (a+b) mod 5 ≠ 0) —
-    * shared by the one-shot increment (q202) and the streaming fold
-    * (q210), the one-build-two-consumers shape. */
+    * isolated ones are their own component). The base labeling
+    * (edges with (a+b) mod 5 ≠ 0) is memoized and shared by the
+    * one-shot increment (q202) and the streaming fold (q210), the
+    * one-build-two-consumers shape. */
   private[graft] def ensureCcState(t: Tables): String = {
     import t.spark.implicits._
-    val edges = customerCoEdges(t)
-    val fp = Integer.toHexString(
-      (graft.Tables.parallelLayout(t.spark, t.dir, "lineitem").hashCode * 31
-        + graft.Tables.parallelLayout(t.spark, t.dir, "orders").hashCode))
-    ccBuilt.computeIfAbsent((t.spark.sparkContext, fp), _ => {
-      val name = s"graft_cc_state_$fp"
+    State.ensure(t, "cc_state", "lineitem", "orders") {
       buildCcState(t.customer.select($"c_custkey"),
-        edges.filter(($"a" + $"b") % 5 =!= 0), name)
-      name
-    })
+        customerCoEdges(t).filter(($"a" + $"b") % 5 =!= 0), _)
+    }
   }
 
   def ccCoPurchaseIncremental(t: Tables): DataFrame = {
@@ -1166,9 +1130,7 @@ object Graph {
       least(col(aCol), col(bCol)).as("a"),
       greatest(col(aCol), col(bCol)).as("b")).distinct()
     val et = s"${table}_edges"
-    spark.sql(s"DROP TABLE IF EXISTS $et")
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    graft.Tables.deleteRec(new java.io.File(wh, et))
+    State.dropTables(spark, et)
     // BOTH endpoints must carry a label: buildCcState's labeling
     // ([[Dedup.connectedComponents]] with edgesWithinNodes=false)
     // silently drops edges with an endpoint outside `nodes`, so the
@@ -1239,31 +1201,22 @@ object Graph {
     // observe() (the connectedComponents recipe) — the fold is
     // round-latency-bound, so the two standalone count jobs were a
     // measurable slice of every micro-batch's wall
-    val delObs = org.apache.spark.sql.Observation()
-    val del = deletes.select(
+    val (del, nDel) = State.checkpointCounted(deletes.select(
         least(col(dA), col(dB)).as("a"),
-        greatest(col(dA), col(dB)).as("b")).distinct()
-      .observe(delObs, count(lit(1)).as("n"))
-      .localCheckpoint(true)
-    val nDel = Option(delObs.get("n")).collect {
-      case n: java.lang.Long => n.longValue() }.getOrElse(0L)
+        greatest(col(dA), col(dB)).as("b")).distinct(),
+      count(lit(1)))
     val ins = inserts.select(
       least(col(iA), col(iB)).as("a"),
       greatest(col(iA), col(iB)).as("b")).distinct()
     // each delete's component off the edge sidecar — the small side
     // broadcasts, the bucketed sidecar streams (no shuffle); the
     // matched rows are delta-bounded, so materialize them once
-    val mObs = org.apache.spark.sql.Observation()
-    val matched = stateEdges
+    val (matched, nMatched) = State.checkpointCounted(stateEdges
       .join(broadcast(del), Seq("a", "b"))
-      .select(col("component"))
-      .observe(mObs, count(lit(1)).as("n"))
-      .localCheckpoint(true)
+      .select(col("component")), count(lit(1)))
     // loud phantom-delete contract: the sidecar's edges are distinct,
     // so |matched| < |deletes| means some delete referenced an edge
     // the state never held — the change log and state have diverged
-    val nMatched = Option(mObs.get("n")).collect {
-      case n: java.lang.Long => n.longValue() }.getOrElse(0L)
     if (nMatched < nDel)
       throw new IllegalArgumentException(
         s"Graph.ccApplyChanges: ${nDel - nMatched} of $nDel deletes "
@@ -1343,25 +1296,16 @@ object Graph {
     * is the from-scratch closure over exactly the (a+b) mod 7 ≠ 0
     * edges — blind to the engine's base/delete/insert split. Bridges
     * that split components are exercised by construction (the spec
-    * additionally pins a hand-built bridge vs non-bridge pair). */
-  private val ccrBuilt = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String), String]()
-
-  /** The memoized q208 FULL state (labels + edge sidecar; base =
-    * edges with (3a+b) mod 11 ≠ 0) — shared by the one-shot apply
-    * (q208) and the streaming fold (q213). */
+    * additionally pins a hand-built bridge vs non-bridge pair). The
+    * FULL state (labels + edge sidecar; base = edges with (3a+b) mod
+    * 11 ≠ 0) is memoized and shared by the one-shot apply (q208) and
+    * the streaming fold (q213). */
   private[graft] def ensureCcrState(t: Tables): String = {
     import t.spark.implicits._
-    val edges = customerCoEdges(t)
-    val fp = Integer.toHexString(
-      (graft.Tables.parallelLayout(t.spark, t.dir, "lineitem").hashCode * 31
-        + graft.Tables.parallelLayout(t.spark, t.dir, "orders").hashCode))
-    ccrBuilt.computeIfAbsent((t.spark.sparkContext, fp), _ => {
-      val name = s"graft_ccr_state_$fp"
+    State.ensure(t, "ccr_state", "lineitem", "orders") {
       buildCcStateFull(t.customer.select($"c_custkey"),
-        edges.filter(($"a" * 3 + $"b") % 11 =!= 0), name)
-      name
-    })
+        customerCoEdges(t).filter(($"a" * 3 + $"b") % 11 =!= 0), _)
+    }
   }
 
   /** q208's deterministic change set over the co-purchase graph:
@@ -1527,43 +1471,37 @@ object Graph {
     * every time today's delta arrives. The one fact-fact join feeds
     * both graphs (o_orderkey survives the join, the residue slices
     * off the same computed frame). */
-  private val prWarmBuilt = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String), (DataFrame, DataFrame)]()
   def pageRankWarmTrade(t: Tables, d: Double = 0.85): DataFrame = {
     import t.spark.implicits._
     val storage = org.apache.spark.storage.StorageLevel.fromString(
       sys.env.getOrElse("SPARK_GRAFT_PR_STORAGE", "MEMORY_AND_DISK"))
-    val fp = Integer.toHexString(
-      graft.Tables.parallelLayout(t.spark, t.dir, "orders").hashCode)
-    val (full, prior) = prWarmBuilt.computeIfAbsent(
-      (t.spark.sparkContext, fp), _ => {
-        val keyed = t.orders.select($"o_orderkey", $"o_custkey")
-          .join(t.lineitem.select($"l_orderkey", $"l_suppkey"),
-            $"o_orderkey" === $"l_orderkey")
-          .select($"o_orderkey".as("okey"), ($"o_custkey" * 2).as("c"),
-            ($"l_suppkey" * 2 + 1).as("s"))
-          .localCheckpoint(false, storage)
-        def sym(p: DataFrame) = p.select($"c".as("src"), $"s".as("dst"))
-          .union(p.select($"s".as("src"), $"c".as("dst")))
-        val base = sym(keyed.filter($"okey" % 11 =!= 0)
-          .select($"c", $"s").distinct())
-        // the persisted pieces honor the storage valve (an sf10 edge
-        // list at MEMORY_AND_DISK evicts everything else); the keyed
-        // join frame is build-scaffolding only — free its blocks once
-        // both graphs have been derived from it
-        // distinct by construction (c even / s odd keeps the two sym
-        // halves disjoint; the pair set is distinct before sym), and
-        // pre-partitioned by src so the warm fold consumes it as-is
-        val fullE = sym(keyed.select($"c", $"s").distinct())
-          .repartition($"src")
-          .localCheckpoint(true, storage)
-        val pr = pageRankOver(base, $"src", $"dst", iters = 3, d = d,
-          storage).localCheckpoint(true)
-        keyed.queryExecution.analyzed.collectFirst {
-          case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-        }.foreach(_.unpersist(false))
-        (fullE, pr)
-      })
+    val (full, prior) = State.memo(t.spark.sparkContext,
+      State.name(t, "pr_warm", "orders")) {
+      val keyed = t.orders.select($"o_orderkey", $"o_custkey")
+        .join(t.lineitem.select($"l_orderkey", $"l_suppkey"),
+          $"o_orderkey" === $"l_orderkey")
+        .select($"o_orderkey".as("okey"), ($"o_custkey" * 2).as("c"),
+          ($"l_suppkey" * 2 + 1).as("s"))
+        .localCheckpoint(false, storage)
+      def sym(p: DataFrame) = p.select($"c".as("src"), $"s".as("dst"))
+        .union(p.select($"s".as("src"), $"c".as("dst")))
+      val base = sym(keyed.filter($"okey" % 11 =!= 0)
+        .select($"c", $"s").distinct())
+      // the persisted pieces honor the storage valve (an sf10 edge
+      // list at MEMORY_AND_DISK evicts everything else); the keyed
+      // join frame is build-scaffolding only — free its blocks once
+      // both graphs have been derived from it
+      // distinct by construction (c even / s odd keeps the two sym
+      // halves disjoint; the pair set is distinct before sym), and
+      // pre-partitioned by src so the warm fold consumes it as-is
+      val fullE = sym(keyed.select($"c", $"s").distinct())
+        .repartition($"src")
+        .localCheckpoint(true, storage)
+      val pr = pageRankOver(base, $"src", $"dst", iters = 3, d = d,
+        storage).localCheckpoint(true)
+      unpersistCheckpointed(keyed)
+      (fullE, pr)
+    }
     pageRankWarmStart(full, $"src", $"dst", prior, iters = 2, d = d, storage,
         edgesPrepared = true)
       .select($"id",

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{State, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -48,10 +48,7 @@ object Ivm {
     * the one-time (or per-load, rolled forward) view materialization. */
   def buildAggIndex(facts: DataFrame, keyCol: Column, measureQ: Column,
       table: String, buckets: Int = 8): Unit = {
-    val spark = facts.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    graft.Tables.deleteRec(new java.io.File(wh, table))
+    State.dropTables(facts.sparkSession, table)
     partials(facts, keyCol, measureQ)
       .repartition(buckets, col("key")).write.bucketBy(buckets, "key").sortBy("key")
       .saveAsTable(table)
@@ -114,10 +111,7 @@ object Ivm {
   def buildFactIndex(facts: DataFrame, table: String, buckets: Int = 8): Unit = {
     require(facts.columns.sameElements(Seq("fkey", "key", "q")),
       s"fact index must be (fkey, key, q): ${facts.columns.toSeq}")
-    val spark = facts.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    graft.Tables.deleteRec(new java.io.File(wh, table))
+    State.dropTables(facts.sparkSession, table)
     // repartition to the bucket spec first: bucketBy from an N-task
     // upstream writes up to N files PER BUCKET (measured 255 files for
     // an 8-bucket sidecar at sf0.001), and every later touched-group
@@ -282,21 +276,14 @@ object Ivm {
     * per-customer aggregate index build once (memoized); the move
     * delta folds in at query time reading ONLY the moved customers'
     * partials — must hash-equal the oracle's from-scratch GROUP BY
-    * over the post-move world. */
-  private val dimMoveBuilt = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String), String]()
-
-  /** The memoized per-customer aggregate index (q195/q199). */
+    * over the post-move world. This is that memoized per-customer
+    * aggregate index (q195/q199). */
   private[graft] def ensureCustAggIndex(t: Tables): String = {
     import t.spark.implicits._
-    val fp = Integer.toHexString(
-      graft.Tables.parallelLayout(t.spark, t.dir, "orders").hashCode)
-    dimMoveBuilt.computeIfAbsent((t.spark.sparkContext, fp), _ => {
-      val name = s"graft_ivm_cust_$fp"
+    State.ensure(t, "ivm_cust", "orders") {
       buildAggIndex(t.orders, $"o_custkey",
-        floor($"o_totalprice" * 100 + 0.5).cast("long"), name)
-      name
-    })
+        floor($"o_totalprice" * 100 + 0.5).cast("long"), _)
+    }
   }
 
   /** The pre-move per-nation (g, n, s) view off the per-customer
@@ -462,20 +449,13 @@ object Ivm {
     * is built from pre-1997 orders once (memoized per fixture
     * fingerprint), the 1997+ delta folded in at query time. Must
     * hash-equal the oracle's from-scratch GROUP BY over ALL orders. */
-  private val viewBuilt = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String), String]()
   def incrementalOrderRollup(t: Tables): DataFrame = {
     import t.spark.implicits._
     val cents = floor($"o_totalprice" * 100 + 0.5).cast("long")
     val cut = lit("1997-01-01 00:00:00").cast("timestamp")
-    val fp = Integer.toHexString(
-      graft.Tables.parallelLayout(t.spark, t.dir, "orders").hashCode)
-    val table = viewBuilt.computeIfAbsent((t.spark.sparkContext, fp), _ => {
-      val name = s"graft_ivm_orders_$fp"
-      buildAggIndex(t.orders.filter($"o_orderdate" < cut), $"o_custkey",
-        cents, name)
-      name
-    })
+    val table = State.ensure(t, "ivm_orders", "orders") {
+      buildAggIndex(t.orders.filter($"o_orderdate" < cut), $"o_custkey", cents, _)
+    }
     mergeDelta(t.orders.filter($"o_orderdate" >= cut), $"o_custkey",
       cents, table)
       .select($"key".as("o_custkey"), $"n".as("n_orders"),
@@ -533,21 +513,16 @@ object Ivm {
     * hash-equal the oracle's from-scratch GROUP BY over the SURVIVING
     * facts — the two halves of the round-9 mutation family (q158's
     * deletes, q167's view) finally composing. */
-  private val retractBuilt = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String), (String, String)]()
   def retractableOrderRollup(t: Tables): DataFrame = {
     import t.spark.implicits._
-    val fp = Integer.toHexString(
-      graft.Tables.parallelLayout(t.spark, t.dir, "orders").hashCode)
-    val (viewTable, factsTable) =
-      retractBuilt.computeIfAbsent((t.spark.sparkContext, fp), _ => {
-        val vt = s"graft_ivmr_view_$fp"
-        val ft = s"graft_ivmr_facts_$fp"
-        buildAggIndex(t.orders, $"o_custkey",
-          floor($"o_totalprice" * 100 + 0.5).cast("long"), vt)
-        buildFactIndex(orderFacts(t), ft)
-        (vt, ft)
-      })
+    val vt = State.name(t, "ivmr_view", "orders")
+    val (viewTable, factsTable) = State.memo(t.spark.sparkContext, vt) {
+      val ft = State.name(t, "ivmr_facts", "orders")
+      buildAggIndex(t.orders, $"o_custkey",
+        floor($"o_totalprice" * 100 + 0.5).cast("long"), vt)
+      buildFactIndex(orderFacts(t), ft)
+      (vt, ft)
+    }
     mergeDeltaRetract(orderFactDelta(t), viewTable, factsTable)
       .select($"key".as("o_custkey"), $"n".as("n_orders"),
         ($"s".cast("double") / 100.0).as("total_price"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{State, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -87,13 +87,7 @@ object MultiIvm {
     * side). */
   def buildMultiView(facts: DataFrame, measures: Seq[String],
       distincts: Seq[String], table: String, buckets: Int = 8): Unit = {
-    val spark = facts.sparkSession
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    def clear(n: String): Unit = {
-      spark.sql(s"DROP TABLE IF EXISTS $n")
-      graft.Tables.deleteRec(new java.io.File(wh, n))
-    }
-    clear(table)
+    State.dropTables(facts.sparkSession, table)
     // every bucketed write below is pre-partitioned to the bucket
     // spec — one file per bucket instead of up-to-N-writer-tasks
     // files per bucket (the Ivm.buildFactIndex note; guide §6)
@@ -102,7 +96,7 @@ object MultiIvm {
       .write.bucketBy(buckets, "key").sortBy("key").saveAsTable(table)
     distincts.foreach { d =>
       val mt = s"${table}_mult_$d"
-      clear(mt)
+      State.dropTables(facts.sparkSession, mt)
       facts.groupBy(col("key"), col(d).as("v"))
         .agg(count(lit(1)).as("m"))
         .repartition(buckets, col("key"))
@@ -457,13 +451,7 @@ object MultiIvm {
     require(hlls.forall(distincts.contains),
       s"every hll column needs the multiplicity sidecar of a declared " +
         s"distinct (retraction rebuilds from it): $hlls vs $distincts")
-    val spark = facts.sparkSession
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    def clear(n: String): Unit = {
-      spark.sql(s"DROP TABLE IF EXISTS $n")
-      graft.Tables.deleteRec(new java.io.File(wh, n))
-    }
-    clear(table)
+    State.dropTables(facts.sparkSession, table)
     val withTk = topks.foldLeft(multiPartialsFull(facts, measures, distincts)) {
       case (acc, (m, k)) => acc.join(topkOf(facts, m, k, s"tk_$m"), "key")
     }
@@ -476,14 +464,14 @@ object MultiIvm {
       .write.bucketBy(buckets, "key").sortBy("key").saveAsTable(table)
     distincts.foreach { d =>
       val mt = s"${table}_mult_$d"
-      clear(mt)
+      State.dropTables(facts.sparkSession, mt)
       facts.groupBy(col("key"), col(d).as("v"))
         .agg(count(lit(1)).as("m"))
         .repartition(buckets, col("key"))
         .write.bucketBy(buckets, "key").sortBy("key", "v").saveAsTable(mt)
     }
     val ft = s"${table}_facts"
-    clear(ft)
+    State.dropTables(facts.sparkSession, ft)
     // the fact sidecar is read by EVERY retraction fold (touched-group
     // re-derivation) — pre-partitioning matters most here (was 255
     // files for 8 buckets at sf0.001, one scan task per file per fold)
@@ -807,21 +795,13 @@ object MultiIvm {
           .as("new_prio"))
   }
 
-  private val multiBuilt = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String), String]()
-
   /** The memoized per-customer multi-measure state (view + multiplicity
     * sidecars) — shared read-only by q200 (fact deltas) and q206 (dim
     * moves), the same one-build-two-consumers shape as q195/q199. */
-  private[graft] def ensureMultiView(t: Tables): String = {
-    val fp = Integer.toHexString(
-      graft.Tables.parallelLayout(t.spark, t.dir, "orders").hashCode)
-    multiBuilt.computeIfAbsent((t.spark.sparkContext, fp), _ => {
-      val name = s"graft_mivm_$fp"
-      buildMultiView(orderMultiFacts(t), Measures, Distincts, name)
-      name
-    })
-  }
+  private[graft] def ensureMultiView(t: Tables): String =
+    State.ensure(t, "mivm", "orders") {
+      buildMultiView(orderMultiFacts(t), Measures, Distincts, _)
+    }
 
   /** q200: the per-customer view — count, total/avg/variance of price
     * (split exact moments), a second sum, and a count-distinct of
@@ -908,23 +888,14 @@ object MultiIvm {
 
   // ── q209/q212 fixtures: the FULL per-customer state ──────────────────
 
-  private val multiFullBuilt = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String), String]()
-
   /** The memoized FULL per-customer state (min/max view + multiplicity
     * sidecars + bucketed fact sidecar) — shared by q209 (fact deltas)
     * and q212 (dim moves), the q200/q206 one-build-two-consumers
     * shape lifted to the full algebra. */
-  private[graft] def ensureMultiViewFull(t: Tables): String = {
-    val fp = Integer.toHexString(
-      graft.Tables.parallelLayout(t.spark, t.dir, "orders").hashCode)
-    multiFullBuilt.computeIfAbsent((t.spark.sparkContext, fp), _ => {
-      val name = s"graft_mivmf_$fp"
-      buildMultiViewFull(orderMultiFacts(t), Measures, Distincts, name,
-        topks = TopKs)
-      name
-    })
-  }
+  private[graft] def ensureMultiViewFull(t: Tables): String =
+    State.ensure(t, "mivmf", "orders") {
+      buildMultiViewFull(orderMultiFacts(t), Measures, Distincts, _, topks = TopKs)
+    }
 
   /** q209: q200's maintenance carrying min/max too — ONE view now
     * holds count, exact total/avg/variance, a second sum, the
@@ -1114,17 +1085,10 @@ object MultiIvm {
           ((col("cents") + 55L) / 100).cast("long").as("new_pval")))
   }
 
-  private val hllBuilt = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String), String]()
-  private[graft] def ensureHllView(t: Tables): String = {
-    val fp = Integer.toHexString(
-      graft.Tables.parallelLayout(t.spark, t.dir, "orders").hashCode)
-    hllBuilt.computeIfAbsent((t.spark.sparkContext, fp), _ => {
-      val name = s"graft_mivmh_$fp"
-      buildMultiViewFull(orderHllFacts(t), HMs, HDs, name, hlls = HHs)
-      name
-    })
-  }
+  private[graft] def ensureHllView(t: Tables): String =
+    State.ensure(t, "mivmh", "orders") {
+      buildMultiViewFull(orderHllFacts(t), HMs, HDs, _, hlls = HHs)
+    }
 
   /** q218: the maintained sketch's estimate must stay within
     * `maxRelErr` of the maintained EXACT count after the I/D/U+move

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{State, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -892,11 +892,7 @@ object Relational {
   def buildErIndex(df: DataFrame, idCol: Column, blockCol: Column,
       nameCol: Column, maxDist: Int, table: String, buckets: Int = 8): Unit = {
     val spark = df.sparkSession
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    Seq(table, s"${table}_golden").foreach { n =>
-      spark.sql(s"DROP TABLE IF EXISTS $n")
-      graft.Tables.deleteRec(new java.io.File(wh, n))
-    }
+    State.dropTables(spark, table, s"${table}_golden")
     val base = df.select(idCol.as("id"), blockCol.as("block"),
       nameCol.as("name"))
     val pairs = fuzzyPairsOver(df, idCol, blockCol, nameCol, maxDist)
@@ -1004,12 +1000,8 @@ object Relational {
     val g = updatedGolden.localCheckpoint(true)
     val m = updatedMembers.localCheckpoint(true)
     val p = updatedPairs.map(_.localCheckpoint(true))
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    (Seq(table, s"${table}_golden") ++ p.map(_ => s"${table}_pairs"))
-      .foreach { n =>
-        spark.sql(s"DROP TABLE IF EXISTS $n")
-        graft.Tables.deleteRec(new java.io.File(wh, n))
-      }
+    State.dropTables(spark,
+      Seq(table, s"${table}_golden") ++ p.map(_ => s"${table}_pairs"): _*)
     m.repartition(buckets, col("cluster"))
       .write.bucketBy(buckets, "cluster").saveAsTable(table)
     g.repartition(buckets, col("block"))
@@ -1023,18 +1015,12 @@ object Relational {
     * from 90% of parts once (memoized), the p_partkey%10==4 batch
     * matched in at query time; must hash-equal q157's FULL-corpus
     * resolution (the oracle is q157's verbatim). */
-  private val erBuilt = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String), String]()
   def partGoldenRecordsIncremental(t: Tables, maxDist: Int = 2): DataFrame = {
     import t.spark.implicits._
-    val fp = Integer.toHexString(
-      graft.Tables.parallelLayout(t.spark, t.dir, "part").hashCode)
-    val table = erBuilt.computeIfAbsent((t.spark.sparkContext, fp), _ => {
-      val name = s"graft_er_$fp"
+    val table = State.ensure(t, "er", "part") {
       buildErIndex(t.part.filter($"p_partkey" % 10 =!= 4),
-        $"p_partkey", $"p_brand", $"p_name", maxDist, name)
-      name
-    })
+        $"p_partkey", $"p_brand", $"p_name", maxDist, _)
+    }
     val delta = t.part.filter($"p_partkey" % 10 === 4)
       .select($"p_partkey".as("id"), $"p_brand".as("block"),
         $"p_name".as("name"))
@@ -1074,11 +1060,7 @@ object Relational {
   def buildErIndexFull(df: DataFrame, idCol: Column, blockCol: Column,
       nameCol: Column, maxDist: Int, table: String, buckets: Int = 8): Unit = {
     val spark = df.sparkSession
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    Seq(table, s"${table}_golden", s"${table}_pairs").foreach { n =>
-      spark.sql(s"DROP TABLE IF EXISTS $n")
-      graft.Tables.deleteRec(new java.io.File(wh, n))
-    }
+    State.dropTables(spark, table, s"${table}_golden", s"${table}_pairs")
     val base = df.select(idCol.as("id"), blockCol.as("block"),
       nameCol.as("name"))
     val pairs = fuzzyPairsOver(df, idCol, blockCol, nameCol, maxDist)
@@ -1122,20 +1104,14 @@ object Relational {
     // both counts ride their frame's materialization job via observe()
     // (the connectedComponents recipe — two fewer driver jobs on a
     // latency-bound fold)
-    val delObs = org.apache.spark.sql.Observation()
-    val del = deleteIds.select(col(deleteIds.columns.head).as("id"))
-      .distinct().observe(delObs, count(lit(1)).as("n"))
-      .localCheckpoint(true)
-    val nDel = Option(delObs.get("n")).collect {
-      case n: java.lang.Long => n.longValue() }.getOrElse(0L)
+    val (del, nDel) = State.checkpointCounted(
+      deleteIds.select(col(deleteIds.columns.head).as("id")).distinct(),
+      count(lit(1)))
     // each delete's cluster off the bucketed membership — the small
     // side broadcasts; the matched rows are delta-bounded
-    val mObs = org.apache.spark.sql.Observation()
-    val matched = members.join(broadcast(del), Seq("id"))
-      .select(col("cluster")).observe(mObs, count(lit(1)).as("n"))
-      .localCheckpoint(true)
-    val nMatched = Option(mObs.get("n")).collect {
-      case n: java.lang.Long => n.longValue() }.getOrElse(0L)
+    val (matched, nMatched) = State.checkpointCounted(
+      members.join(broadcast(del), Seq("id")).select(col("cluster")),
+      count(lit(1)))
     if (nMatched != nDel)
       throw new IllegalArgumentException(
         s"Relational.erApplyDeletes: ${nDel - nMatched} of $nDel deletes "
@@ -1192,11 +1168,7 @@ object Relational {
     val g = g0.localCheckpoint(true)
     val m = m0.localCheckpoint(true)
     val p = p0.localCheckpoint(true)
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    Seq(table, s"${table}_golden", s"${table}_pairs").foreach { n =>
-      spark.sql(s"DROP TABLE IF EXISTS $n")
-      graft.Tables.deleteRec(new java.io.File(wh, n))
-    }
+    State.dropTables(spark, table, s"${table}_golden", s"${table}_pairs")
     m.repartition(buckets, col("cluster"))
       .write.bucketBy(buckets, "cluster").saveAsTable(table)
     g.repartition(buckets, col("block"))
@@ -1212,18 +1184,11 @@ object Relational {
     * golden table covers the survivors and must hash-equal q157's
     * from-scratch resolution of exactly the surviving corpus — blind
     * to the engine's state/delete split. */
-  private val erFullBuilt = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String), String]()
   def partGoldenRecordsDelete(t: Tables, maxDist: Int = 2): DataFrame = {
     import t.spark.implicits._
-    val fp = Integer.toHexString(
-      graft.Tables.parallelLayout(t.spark, t.dir, "part").hashCode)
-    val table = erFullBuilt.computeIfAbsent((t.spark.sparkContext, fp), _ => {
-      val name = s"graft_erf_$fp"
-      buildErIndexFull(t.part, $"p_partkey", $"p_brand", $"p_name",
-        maxDist, name)
-      name
-    })
+    val table = State.ensure(t, "erf", "part") {
+      buildErIndexFull(t.part, $"p_partkey", $"p_brand", $"p_name", maxDist, _)
+    }
     erApplyDeletes(t.part.filter($"p_partkey" % 17 === 3)
         .select($"p_partkey"), table)
       .select($"cluster_id", $"golden_id", $"golden_name", $"n_members")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{State, Tables}
 import graft.functions.SimilarityFunctions._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -254,14 +254,10 @@ object Similarity {
     // instead of pinned for the session. The row count rides the
     // checkpoint's materialization via observe() (the
     // connectedComponents recipe) — no standalone count() job.
-    val nObs = org.apache.spark.sql.Observation()
-    val vecs0 = t.embeddings
+    val (vecs0, nVecs) = State.checkpointCounted(t.embeddings
       .select($"vec_id", $"embedding",
-        array_to_vector(transform($"embedding", x => x.cast("double"))).as("features"))
-      .observe(nObs, count(lit(1)).as("n"))
-      .localCheckpoint(true)
-    val nVecs = Option(nObs.get("n")).collect {
-      case n: java.lang.Long => n.longValue() }.getOrElse(0L)
+        array_to_vector(transform($"embedding", x => x.cast("double"))).as("features")),
+      count(lit(1)))
     // fit parallelism from the fit-input size, not the scan layout
     // (the fitPq rule): ~16k rows/task keeps Lloyd-pass compute above
     // task overhead; the coalesce reads the checkpoint blocks, it
@@ -643,11 +639,7 @@ object Similarity {
     val tr = trainOn.map(_.select(idCol.as("vec_id"), embCol.as("embedding")))
       .getOrElse(base)
     val model = fitPq(tr, m, ks, nList, trainCap)
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    Seq(table, s"${table}_meta", s"${table}_lists").foreach { n =>
-      spark.sql(s"DROP TABLE IF EXISTS $n")
-      graft.Tables.deleteRec(new java.io.File(wh, n))
-    }
+    State.dropTables(spark, table, s"${table}_meta", s"${table}_lists")
     // repartition by list before the partitioned write: encodePq
     // inherits the corpus scan's partitioning, and partitionBy from N
     // tasks writes up to N files per list directory (measured 874
@@ -842,10 +834,8 @@ object Similarity {
     * excluded tombstones); AnnIndexSpec asserts it row-for-row. */
   def compactAnnIndex(spark: org.apache.spark.sql.SparkSession,
       table: String): Unit = {
-    val tmp = s"${table}_compacting"
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val tmpDir = new java.io.File(wh, tmp)
-    val liveDir = new java.io.File(wh, table)
+    val tmpDir = State.tableDir(spark, s"${table}_compacting")
+    val liveDir = State.tableDir(spark, table)
     // Crash recovery FIRST: a prior compaction that died between
     // deleting the live dir and renaming staging left the compacted
     // survivors as the SOLE copy under the staging dir — finishing
@@ -883,8 +873,7 @@ object Similarity {
     // Swap window (drop → move → create) is metadata-only — the live
     // name is absent for milliseconds, not for a corpus rewrite; a
     // crash inside it is recovered by the entry guard above.
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    graft.Tables.deleteRec(liveDir)
+    State.dropTables(spark, table)
     finishIndexSwap(spark, table, tmpDir, liveDir)
   }
 
@@ -897,7 +886,6 @@ object Similarity {
     * are physically gone; [[annAssignmentPsi]] lazily rebuilds it). */
   private def finishIndexSwap(spark: org.apache.spark.sql.SparkSession,
       table: String, tmpDir: java.io.File, liveDir: java.io.File): Unit = {
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     require(tmpDir.renameTo(liveDir),
       s"compactAnnIndex: could not move $tmpDir over $liveDir")
     spark.sql(s"DROP TABLE IF EXISTS $table") // recovery: stale entry
@@ -905,10 +893,7 @@ object Similarity {
     spark.sql(s"ALTER TABLE $table RECOVER PARTITIONS")
     spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES " +
       s"('graft.epoch' = '${metaEpoch(spark, table)}')")
-    spark.sql(s"DROP TABLE IF EXISTS ${table}_tombs")
-    graft.Tables.deleteRec(new java.io.File(wh, s"${table}_tombs"))
-    spark.sql(s"DROP TABLE IF EXISTS ${table}_lists")
-    graft.Tables.deleteRec(new java.io.File(wh, s"${table}_lists"))
+    State.dropTables(spark, s"${table}_tombs", s"${table}_lists")
   }
 
   // ── q204: quantizer-drift detection + retrain lifecycle ─────────────
@@ -954,12 +939,7 @@ object Similarity {
     if (spark.catalog.tableExists(lists)) {
       val scCnt = spark.table(lists)
         .agg(coalesce(sum(col("cnt")), lit(0L))).head().getLong(0)
-      if (scCnt != spark.table(table).count()) {
-        spark.sql(s"DROP TABLE IF EXISTS $lists")
-        val wh = spark.conf.get("spark.sql.warehouse.dir")
-          .stripPrefix("file:")
-        graft.Tables.deleteRec(new java.io.File(wh, lists))
-      }
+      if (scCnt != spark.table(table).count()) State.dropTables(spark, lists)
     }
     if (!spark.catalog.tableExists(lists))
       spark.table(table).groupBy(col("ivf_list"))
@@ -983,11 +963,9 @@ object Similarity {
   private def swapTableFiles(spark: org.apache.spark.sql.SparkSession,
       fromTable: String, toTable: String, partitioned: Boolean,
       epoch: Option[Long] = None): Unit = {
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val fromDir = new java.io.File(wh, fromTable)
-    val toDir = new java.io.File(wh, toTable)
-    spark.sql(s"DROP TABLE IF EXISTS $toTable")
-    graft.Tables.deleteRec(toDir)
+    val fromDir = State.tableDir(spark, fromTable)
+    val toDir = State.tableDir(spark, toTable)
+    State.dropTables(spark, toTable)
     require(fromDir.renameTo(toDir),
       s"swapTableFiles: could not move $fromDir over $toDir")
     spark.sql(s"DROP TABLE IF EXISTS $fromTable") // entry only; files moved
@@ -1030,9 +1008,7 @@ object Similarity {
       partitioned = false)
     swapTableFiles(spark, s"${green}_meta", s"${table}_meta",
       partitioned = false)
-    spark.sql(s"DROP TABLE IF EXISTS ${table}_tombs")
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    graft.Tables.deleteRec(new java.io.File(wh, s"${table}_tombs"))
+    State.dropTables(spark, s"${table}_tombs")
   }
 
   /** q204's deterministic distribution shift: the vec_id ≡ 0 (mod 3)
@@ -1085,9 +1061,6 @@ object Similarity {
       .count().toDouble / (5 * 10).toDouble
   }
 
-  private val annDriftBuilt = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String), String]()
-
   /** Build q204's lifecycle once per fixture: index the undrifted
     * base, measure the drifted delta's assignment PSI, and take the
     * indicated branch (the fixture's shift trips the 0.25 line, so
@@ -1096,10 +1069,7 @@ object Similarity {
   private[graft] def ensureDriftIndex(t: Tables,
       threshold: Double = 0.25): String = {
     import t.spark.implicits._
-    val fp = Integer.toHexString(
-      graft.Tables.parallelLayout(t.spark, t.dir, "embeddings").hashCode)
-    annDriftBuilt.computeIfAbsent((t.spark.sparkContext, fp), _ => {
-      val name = s"graft_ann_drift_$fp"
+    State.ensure(t, "ann_drift", "embeddings") { name =>
       val base = t.embeddings.filter($"vec_id" % 3 =!= 0)
         .select($"vec_id", $"embedding")
       val drifted = driftedCohort(t)
@@ -1111,13 +1081,10 @@ object Similarity {
           name)
       else updateAnnIndex(drifted, $"vec_id", $"embedding", name)
       val dec = s"${name}_decision"
-      t.spark.sql(s"DROP TABLE IF EXISTS $dec")
-      graft.Tables.deleteRec(new java.io.File(t.spark.conf
-        .get("spark.sql.warehouse.dir").stripPrefix("file:"), dec))
+      State.dropTables(t.spark, dec)
       Seq((psi, exceeded, exceeded))
         .toDF("psi", "psi_exceeded", "retrained").write.saveAsTable(dec)
-      name
-    })
+    }
   }
 
   /** q204: the drift-maintained index gated driver-visibly — recall
@@ -1152,25 +1119,18 @@ object Similarity {
     * recall@10 ≥ `floor` vs the exact brute-force top-10 over the
     * WHOLE corpus — the recall contract of a store that took a delta
     * load, not a rebuilt one. */
-  private val annIdxBuilt = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String), String]()
-
   /** Build q182's persisted index once per fixture (base = all but the
     * vec_id%10==7 cohort, which arrives via the frozen-quantizer delta
     * append) — shared by the q182/q188/q189 gates so the 17 quantizer
     * fits are paid once per fixture, as production would. */
   private def ensureAnnIndex(t: Tables): String = {
     import t.spark.implicits._
-    val fp = Integer.toHexString(
-      graft.Tables.parallelLayout(t.spark, t.dir, "embeddings").hashCode)
-    annIdxBuilt.computeIfAbsent((t.spark.sparkContext, fp), _ => {
-      val name = s"graft_ann_idx_$fp"
+    State.ensure(t, "ann_idx", "embeddings") { name =>
       buildAnnIndex(t.embeddings.filter($"vec_id" % 10 =!= 7),
         $"vec_id", $"embedding", name)
       updateAnnIndex(t.embeddings.filter($"vec_id" % 10 === 7),
         $"vec_id", $"embedding", name)
-      name
-    })
+    }
   }
 
   /** The q182 probe-depth rule: the ADC shortlist deepens with the
@@ -1249,20 +1209,11 @@ object Similarity {
     * a deleted vector must never be returned (the anti-join runs
     * BEFORE the ADC rank, so it can't displace live shortlist rows
     * either; compaction equivalence is AnnIndexSpec's job). */
-  private val annDelBuilt = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String), String]()
   def annDeleteGate(t: Tables, floor: Double = 0.9): DataFrame = {
     import t.spark.implicits._
     val src = ensureAnnIndex(t)
-    val fp = Integer.toHexString(
-      graft.Tables.parallelLayout(t.spark, t.dir, "embeddings").hashCode)
-    val table = annDelBuilt.computeIfAbsent((t.spark.sparkContext, fp), _ => {
-      val name = s"graft_ann_del_$fp"
-      val wh = t.spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-      Seq(name, s"${name}_meta", s"${name}_tombs").foreach { n =>
-        t.spark.sql(s"DROP TABLE IF EXISTS $n")
-        graft.Tables.deleteRec(new java.io.File(wh, n))
-      }
+    val table = State.ensure(t, "ann_del", "embeddings") { name =>
+      State.dropTables(t.spark, name, s"${name}_meta", s"${name}_tombs")
       t.spark.table(src).repartition(col("ivf_list"))
         .write.partitionBy("ivf_list").saveAsTable(name)
       t.spark.table(s"${src}_meta").write.saveAsTable(s"${name}_meta")
@@ -1272,8 +1223,7 @@ object Similarity {
         s"('graft.epoch' = '${metaEpoch(t.spark, name)}')")
       deleteFromAnnIndex(
         t.embeddings.filter($"vec_id" % 10 === 3).select($"vec_id"), name)
-      name
-    })
+    }
     val probes = t.embeddings.filter($"vec_id" < QueryCount)
       .select($"vec_id".as("q_id"), $"embedding".as("q_emb"))
     val survivors = t.embeddings.filter($"vec_id" % 10 =!= 3)

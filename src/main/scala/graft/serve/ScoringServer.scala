@@ -1,5 +1,6 @@
 package graft.serve
 
+import com.fasterxml.jackson.core.JsonProcessingException
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import graft.ml.{PlayRequest, Scorer}
@@ -86,6 +87,8 @@ final class ScoringServer(scorer: Scorer, replayTable: DataFrame, port: Int = 0)
           s"""{"best_play":${mapper.writeValueAsString(p.bestPlay)},""" +
             s""""passing_yards":${p.passingYards},"running_yards":${p.runningYards}}""")
       } catch {
+        case e: JsonProcessingException =>
+          err(ex, 400, s"request body is not valid JSON: ${e.getOriginalMessage}")
         case e: IllegalArgumentException => err(ex, 400, e.getMessage)
         case e: Exception => err(ex, 500, s"${e.getClass.getSimpleName}: ${e.getMessage}")
       }

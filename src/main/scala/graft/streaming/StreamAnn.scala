@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.Tables
+import graft.{State, Tables}
 import graft.operators.Similarity
 import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -38,9 +38,6 @@ object StreamAnn {
   // minimum turnaround cost (the StreamIvm/StreamGraph rationale)
   private val Chunks = 2
 
-  private val built = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String), String]()
-
   /** Build the base index (all but the vec_id%10==7 cohort) once per
     * fixture, then stream the held-out cohort through the foreachBatch
     * append in [[Chunks]] micro-batches. */
@@ -48,13 +45,10 @@ object StreamAnn {
       dir: String): String = {
     val t = Tables(spark, dir)
     import spark.implicits._
-    val fp = Integer.toHexString(
-      graft.Tables.parallelLayout(spark, dir, "embeddings").hashCode)
-    built.computeIfAbsent((spark.sparkContext, fp), _ => {
-      val name = s"graft_ann_stream_$fp"
+    State.ensure(t, "ann_stream", "embeddings") { name =>
       Similarity.buildAnnIndex(t.embeddings.filter($"vec_id" % 10 =!= 7),
         $"vec_id", $"embedding", name)
-      val deltaRows = SliceCache.memo(t.spark.sparkContext, s"q205:${t.dir}") {
+      val deltaRows = State.memo(t.spark.sparkContext, s"q205:${t.dir}") {
         t.embeddings.filter($"vec_id" % 10 === 7)
           .select($"vec_id", $"embedding")
           .orderBy($"vec_id").as[ReplayVec].collect().toSeq
@@ -69,10 +63,7 @@ object StreamAnn {
       ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
       implicit val sqlCtx: SQLContext = ss.sqlContext
       val input = MemoryStream[ReplayVec]
-      val ckRoot = if (new java.io.File("/dev/shm").isDirectory) "/dev/shm"
-        else System.getProperty("java.io.tmpdir")
-      val ckDir = new java.io.File(ckRoot,
-        "graft_stream_ann_" + java.util.UUID.randomUUID())
+      val ckDir = StreamReplay.checkpointDir("graft_stream_ann_")
       val q = input.toDS().writeStream
         .option("checkpointLocation", ckDir.getPath)
         .foreachBatch {
@@ -94,8 +85,7 @@ object StreamAnn {
       // appends don't invalidate it — refresh, or the caller reads the
       // pre-stream file listing
       spark.catalog.refreshTable(name)
-      name
-    })
+    }
   }
 
   /** q205 — the streamed index answers the q182 probes under the same

@@ -49,10 +49,7 @@ object StreamCdc {
     // cross-thread publication explicit rather than riding on
     // StreamExecution's internal locking
     @volatile var snapshot: Option[DataFrame] = None
-    val ckRoot = if (new java.io.File("/dev/shm").isDirectory) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val ckDir = new java.io.File(ckRoot,
-      "graft_stream_cdc_" + java.util.UUID.randomUUID())
+    val ckDir = StreamReplay.checkpointDir("graft_stream_cdc_")
     val q = input.toDS().writeStream
       .option("checkpointLocation", ckDir.getPath)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[ReplayEvent], _: Long) =>
@@ -105,10 +102,7 @@ object StreamCdc {
     implicit val sqlCtx: SQLContext = ss.sqlContext
     val input = MemoryStream[ReplayEvent]
     @volatile var dim: Option[DataFrame] = None
-    val ckRoot = if (new java.io.File("/dev/shm").isDirectory) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val ckDir = new java.io.File(ckRoot,
-      "graft_stream_scd2_" + java.util.UUID.randomUUID())
+    val ckDir = StreamReplay.checkpointDir("graft_stream_scd2_")
     val q = input.toDS().writeStream
       .option("checkpointLocation", ckDir.getPath)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[ReplayEvent], _: Long) =>

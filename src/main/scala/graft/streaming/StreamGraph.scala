@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.Tables
+import graft.{State, Tables}
 import graft.operators.Graph
 import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -49,7 +49,7 @@ object StreamGraph {
     import spark.implicits._
     val t = Tables(spark, dir)
     val table = Graph.ensureCcState(t)
-    val deltaRows = SliceCache.memo(spark.sparkContext, s"q210:$dir") {
+    val deltaRows = State.memo(spark.sparkContext, s"q210:$dir") {
       Graph.customerCoEdges(t)
         .filter(($"a" + $"b") % 5 === 0)
         .orderBy($"a", $"b").as[ReplayEdge].collect().toSeq
@@ -65,10 +65,7 @@ object StreamGraph {
     implicit val sqlCtx: SQLContext = ss.sqlContext
     val input = MemoryStream[ReplayEdge]
     @volatile var state: DataFrame = ss.table(table).localCheckpoint(true)
-    val ckRoot = if (new java.io.File("/dev/shm").isDirectory) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val ckDir = new java.io.File(ckRoot,
-      "graft_stream_cc_" + java.util.UUID.randomUUID())
+    val ckDir = StreamReplay.checkpointDir("graft_stream_cc_")
     val q = input.toDS().writeStream
       .option("checkpointLocation", ckDir.getPath)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[ReplayEdge], _: Long) =>
@@ -100,26 +97,18 @@ object StreamGraph {
     * q213 oracle SQL. */
   private[streaming] val MaxStreamNode = 4096L
 
-  private val ccrBuilt = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String), String]()
-
   /** The bounded q213 base state: the q208 split restricted to the
     * [[MaxStreamNode]] subgraph (labels + edge sidecar). */
   private def ensureBoundedCcrState(t: Tables): String = {
     import t.spark.implicits._
-    val fp = Integer.toHexString(
-      (graft.Tables.parallelLayout(t.spark, t.dir, "lineitem").hashCode * 31
-        + graft.Tables.parallelLayout(t.spark, t.dir, "orders").hashCode))
-    ccrBuilt.computeIfAbsent((t.spark.sparkContext, fp), _ => {
-      val name = s"graft_ccrs_state_$fp"
+    State.ensure(t, "ccrs_state", "lineitem", "orders") {
       Graph.buildCcStateFull(
         t.customer.select($"c_custkey").filter($"c_custkey" < MaxStreamNode),
         Graph.customerCoEdges(t)
           .filter($"a" < MaxStreamNode && $"b" < MaxStreamNode &&
             ($"a" * 3 + $"b") % 11 =!= 0),
-        name)
-      name
-    })
+        _)
+    }
   }
 
   private def boundedChanges(t: Tables): DataFrame = {
@@ -153,7 +142,7 @@ object StreamGraph {
     import spark.implicits._
     val t = Tables(spark, dir)
     val table = ensureBoundedCcrState(t)
-    val changeRows = SliceCache.memo(spark.sparkContext, s"q213:$dir") {
+    val changeRows = State.memo(spark.sparkContext, s"q213:$dir") {
       boundedChanges(t)
         .orderBy($"a", $"b", $"op").as[ReplayEdgeOp].collect().toSeq
     }
@@ -179,10 +168,7 @@ object StreamGraph {
     @volatile var state: DataFrame = ss.table(table).localCheckpoint(true)
     @volatile var stateEdges: DataFrame =
       ss.table(s"${table}_edges").localCheckpoint(true)
-    val ckRoot = if (new java.io.File("/dev/shm").isDirectory) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val ckDir = new java.io.File(ckRoot,
-      "graft_stream_ccr_" + java.util.UUID.randomUUID())
+    val ckDir = StreamReplay.checkpointDir("graft_stream_ccr_")
     val q = input.toDS().writeStream
       .option("checkpointLocation", ckDir.getPath)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[ReplayEdgeOp], _: Long) =>

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.Tables
+import graft.{State, Tables}
 import graft.operators.Ivm
 import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -63,7 +63,7 @@ object StreamIvm {
     * final view shaped exactly like q167's output. */
   def orderRollup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val slice = SliceCache.memo(spark.sparkContext, s"q177:$dir") {
+    val slice = State.memo(spark.sparkContext, s"q177:$dir") {
       Tables(spark, dir).orders
         .filter($"o_orderkey" < MaxStreamOrderKey)
         .select($"o_orderdate", $"o_orderkey", $"o_custkey", $"o_totalprice")
@@ -82,10 +82,7 @@ object StreamIvm {
     // @volatile: written on the stream-execution thread, read by the
     // caller thread after stop() — explicit cross-thread publication
     @volatile var view: Option[DataFrame] = None
-    val ckRoot = if (new java.io.File("/dev/shm").isDirectory) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val ckDir = new java.io.File(ckRoot,
-      "graft_stream_ivm_" + java.util.UUID.randomUUID())
+    val ckDir = StreamReplay.checkpointDir("graft_stream_ivm_")
     val q = input.toDS().writeStream
       .option("checkpointLocation", ckDir.getPath)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[ReplayOrder], _: Long) =>
@@ -134,7 +131,7 @@ object StreamIvm {
     * and fact frames are never rescanned wholesale. */
   def orderRollupRetract(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val deltaRows = SliceCache.memo(spark.sparkContext, s"q187:$dir") {
+    val deltaRows = State.memo(spark.sparkContext, s"q187:$dir") {
       Ivm.orderFactDeltaOf(
           Ivm.orderFacts(Tables(spark, dir))
             .filter(col("fkey") < MaxStreamOrderKey))
@@ -154,10 +151,7 @@ object StreamIvm {
       .filter(col("fkey") < MaxStreamOrderKey).localCheckpoint(true)
     @volatile var view: DataFrame =
       Ivm.partials(facts, col("key"), col("q")).localCheckpoint(true)
-    val ckRoot = if (new java.io.File("/dev/shm").isDirectory) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val ckDir = new java.io.File(ckRoot,
-      "graft_stream_ivmr_" + java.util.UUID.randomUUID())
+    val ckDir = StreamReplay.checkpointDir("graft_stream_ivmr_")
     val q = input.toDS().writeStream
       .option("checkpointLocation", ckDir.getPath)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[ReplayFactChange], _: Long) =>
@@ -213,7 +207,7 @@ object StreamIvm {
     val Ds = Seq("prio")
     val boundedFacts = MultiIvm.orderMultiFacts(Tables(spark, dir))
       .filter(col("fkey") < MaxStreamOrderKey)
-    val deltaRows = SliceCache.memo(spark.sparkContext, s"q207:$dir") {
+    val deltaRows = State.memo(spark.sparkContext, s"q207:$dir") {
       MultiIvm.orderMultiDelta(boundedFacts)
         .as[ReplayMultiChange].collect().toSeq.sortBy(_.fkey)
     }
@@ -234,10 +228,7 @@ object StreamIvm {
     @volatile var mult: DataFrame = baseFacts
       .groupBy(col("key"), col("prio").as("v"))
       .agg(count(lit(1)).as("m")).localCheckpoint(true)
-    val ckRoot = if (new java.io.File("/dev/shm").isDirectory) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val ckDir = new java.io.File(ckRoot,
-      "graft_stream_mivm_" + java.util.UUID.randomUUID())
+    val ckDir = StreamReplay.checkpointDir("graft_stream_mivm_")
     val q = input.toDS().writeStream
       .option("checkpointLocation", ckDir.getPath)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[ReplayMultiChange], _: Long) =>
@@ -314,7 +305,7 @@ object StreamIvm {
     val Ds = Seq("prio")
     val t = Tables(spark, dir)
     val perKeyTable = MultiIvm.ensureMultiView(t)
-    val moves = SliceCache.memo(spark.sparkContext, s"nation_moves:$dir") {
+    val moves = State.memo(spark.sparkContext, s"nation_moves:$dir") {
       Ivm.nationMoveDelta(t).as[ReplayDimMove]
         .collect().toSeq.sortBy(_.key)
     }
@@ -330,10 +321,7 @@ object StreamIvm {
     val (view0, gmult0) = MultiIvm.nationMultiBase(Tables(ss, dir), perKeyTable)
     @volatile var view: DataFrame = view0.localCheckpoint(true)
     @volatile var gmult: DataFrame = gmult0.localCheckpoint(true)
-    val ckRoot = if (new java.io.File("/dev/shm").isDirectory) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val ckDir = new java.io.File(ckRoot,
-      "graft_stream_mdimmove_" + java.util.UUID.randomUUID())
+    val ckDir = StreamReplay.checkpointDir("graft_stream_mdimmove_")
     val q = input.toDS().writeStream
       .option("checkpointLocation", ckDir.getPath)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[ReplayDimMove], _: Long) =>
@@ -398,7 +386,7 @@ object StreamIvm {
     val Ds = Seq("prio")
     val t = Tables(spark, dir)
     val perKeyTable = MultiIvm.ensureMultiViewFull(t)
-    val moves = SliceCache.memo(spark.sparkContext, s"nation_moves:$dir") {
+    val moves = State.memo(spark.sparkContext, s"nation_moves:$dir") {
       Ivm.nationMoveDelta(t).as[ReplayDimMove]
         .collect().toSeq.sortBy(_.key)
     }
@@ -421,10 +409,7 @@ object StreamIvm {
       .join(broadcast(ts.nation.select($"n_nationkey".as("c_nationkey"),
         $"n_name".as("g"))), Seq("c_nationkey"))
       .select($"key", $"g").localCheckpoint(true)
-    val ckRoot = if (new java.io.File("/dev/shm").isDirectory) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val ckDir = new java.io.File(ckRoot,
-      "graft_stream_mdmf_" + java.util.UUID.randomUUID())
+    val ckDir = StreamReplay.checkpointDir("graft_stream_mdmf_")
     val q = input.toDS().writeStream
       .option("checkpointLocation", ckDir.getPath)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[ReplayDimMove], _: Long) =>
@@ -481,7 +466,7 @@ object StreamIvm {
     import spark.implicits._
     val t = Tables(spark, dir)
     val aggTable = Ivm.ensureCustAggIndex(t)
-    val moves = SliceCache.memo(spark.sparkContext, s"nation_moves:$dir") {
+    val moves = State.memo(spark.sparkContext, s"nation_moves:$dir") {
       Ivm.nationMoveDelta(t).as[ReplayDimMove]
         .collect().toSeq.sortBy(_.key)
     }
@@ -496,10 +481,7 @@ object StreamIvm {
     val input = MemoryStream[ReplayDimMove]
     @volatile var view: DataFrame =
       Ivm.nationBaseView(Tables(ss, dir), aggTable).localCheckpoint(true)
-    val ckRoot = if (new java.io.File("/dev/shm").isDirectory) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val ckDir = new java.io.File(ckRoot,
-      "graft_stream_dimmove_" + java.util.UUID.randomUUID())
+    val ckDir = StreamReplay.checkpointDir("graft_stream_dimmove_")
     val q = input.toDS().writeStream
       .option("checkpointLocation", ckDir.getPath)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[ReplayDimMove], _: Long) =>

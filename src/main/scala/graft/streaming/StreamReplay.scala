@@ -101,13 +101,7 @@ object StreamReplay {
     implicit val sqlCtx: SQLContext = ss.sqlContext
     val input = MemoryStream[T]
     val name = "graft_replay_" + Ctr.incrementAndGet()
-    // Checkpoint (offset/commit logs + state snapshots, fsync'd every
-    // micro-batch) goes on tmpfs when available: replay durability is
-    // meaningless — determinism comes from the fixed chunking — and
-    // the per-batch log fsync is otherwise the replay's floor.
-    val ckRoot = if (new java.io.File("/dev/shm").isDirectory) "/dev/shm" else
-      System.getProperty("java.io.tmpdir")
-    val ckDir = new java.io.File(ckRoot, name)
+    val ckDir = checkpointDir(name + "_")
     val q = build(input.toDS())
       .writeStream.outputMode("append").format("memory").queryName(name)
       .option("checkpointLocation", ckDir.getPath).start()
@@ -121,6 +115,19 @@ object StreamReplay {
       ss.catalog.dropTempView(name)
       Tables.deleteRec(ckDir)
     }
+  }
+
+  /** A fresh checkpoint directory for a replay, named `prefix` plus a
+    * random suffix. The checkpoint (offset/commit logs + state
+    * snapshots, fsync'd every micro-batch) goes on tmpfs when there is
+    * one: replay durability is meaningless — determinism comes from
+    * the fixed chunking — and the per-batch log fsync is otherwise the
+    * replay's floor. */
+  private[streaming] def checkpointDir(prefix: String): java.io.File = {
+    val shm = new java.io.File("/dev/shm")
+    new java.io.File(
+      if (shm.isDirectory) shm.getPath else System.getProperty("java.io.tmpdir"),
+      prefix + java.util.UUID.randomUUID())
   }
 
   /** Split an ordered slice into `n` equal ts-contiguous chunks. */

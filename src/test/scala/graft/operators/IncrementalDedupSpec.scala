@@ -21,9 +21,8 @@ class IncrementalDedupSpec extends SparkSpec {
     import spark.implicits._
     // force the index to exist (memoized build)
     Dedup.incrementalDedupClusters(sf001).count()
-    val fp = Integer.toHexString(
-      graft.Tables.parallelLayout(spark, sf001.dir, "documents").hashCode)
-    val idxBands = spark.table(s"graft_dedup_idx_${fp}_bands")
+    val idx = graft.State.name(sf001, "dedup_idx", "documents")
+    val idxBands = spark.table(s"${idx}_bands")
     val delta = sf001.documents.filter(($"doc_id" % 10) === 0)
     val dd = Dedup.shingledDocs(delta, $"doc_id", $"text", 3)
     val joined = Dedup.flatBands(dd, 16, 2)

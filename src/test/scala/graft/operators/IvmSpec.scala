@@ -236,12 +236,11 @@ class IvmSpec extends SparkSpec {
   test("mergeDimMove plans no fact scan and no index shuffle") {
     import spark.implicits._
     Ivm.nationRevenueDimMove(sf001).collect() // ensure index exists
-    val fp = Integer.toHexString(
-      graft.Tables.parallelLayout(spark, sf001.dir, "orders").hashCode)
+    val aggTable = graft.State.name(sf001, "ivm_cust", "orders")
     val view = Seq(("NATION_1", 10L, 1000L)).toDF("g", "n", "s")
     val delta = Seq((89L, "NATION_1", "NATION_2"))
       .toDF("key", "g_old", "g_new")
-    val merged = Ivm.mergeDimMove(view, s"graft_ivm_cust_$fp", delta)
+    val merged = Ivm.mergeDimMove(view, aggTable, delta)
     merged.collect()
     val plan = merged.queryExecution.executedPlan
     assert(!plan.toString.contains("orders"),
@@ -279,9 +278,7 @@ class IvmSpec extends SparkSpec {
   test("mergeDimMoveFull: untouched groups keep min/max, movers re-derive, no fact scan") {
     import spark.implicits._
     Ivm.nationRevenueDimMoveFull(sf001).collect() // ensure index exists
-    val fp = Integer.toHexString(
-      graft.Tables.parallelLayout(spark, sf001.dir, "orders").hashCode)
-    val aggTable = s"graft_ivm_cust_$fp"
+    val aggTable = graft.State.name(sf001, "ivm_cust", "orders")
     // hand view with a sentinel untouched group: its mn/mx must pass
     // through byte-identically since no move touches it
     val view = Seq(("G_TOUCHED", 10L, 1000L, 5L, 500L),

@@ -58,6 +58,12 @@ class ScoringServerSpec extends SparkSpec {
     assert(r.statusCode() === 400 && r.body().contains("down"))
   }
 
+  test("syntactically broken JSON → 400 naming the body") {
+    val r = post("/api", """{"qtr":3,"down":""")
+    assert(r.statusCode() === 400, r.body())
+    assert(r.body().contains("request body is not valid JSON"), r.body())
+  }
+
   test("non-POST → 405; bad replay row → 404; health → ok") {
     assert(get("/api").statusCode() === 405)
     assert(get("/play/99999999").statusCode() === 404)
