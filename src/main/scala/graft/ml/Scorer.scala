@@ -77,10 +77,11 @@ final class Scorer(spark: SparkSession, passModel: PipelineModel, runModel: Pipe
       "ydstogo" -> (_.ydstogo.toDouble), "ydsnet" -> (_.ydsnet.toDouble),
       "month_day" -> (_.month_day.toDouble),
       // handleInvalid=error parity: unseen label throws, like the
-      // fitted StringIndexerModel (reference behavior, SURVEY §7a)
+      // fitted StringIndexerModel (reference behavior, SURVEY §7a) —
+      // as a bad argument, since the label comes from the request
       "PlayType_lag_index" -> (r => labelToIndex.getOrElse(r.PlayType_lag,
-        throw new org.apache.spark.SparkException(
-          s"Unseen label: ${r.PlayType_lag}."))))
+        throw new IllegalArgumentException(
+          s"Unseen label in PlayType_lag: ${r.PlayType_lag}"))))
     val getters = assembler.getInputCols.map(field)
     r => gbt.predict(
       org.apache.spark.ml.linalg.Vectors.dense(getters.map(_(r))))
@@ -92,7 +93,9 @@ final class Scorer(spark: SparkSession, passModel: PipelineModel, runModel: Pipe
   private val passLocal = localScorer(passModel)
   private val runLocal = localScorer(runModel)
 
-  /** Same result as [[scoreOne]] without a Spark job per request. */
+  /** Same result as [[scoreOne]] without a Spark job per request. An
+    * unseen `PlayType_lag` throws IllegalArgumentException naming the
+    * field and the label. */
   def scoreOneFast(r: PlayRequest): PlayPrediction = {
     val pass = passLocal(r)
     val run = runLocal(r)

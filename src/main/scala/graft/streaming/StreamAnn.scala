@@ -2,8 +2,7 @@ package graft.streaming
 
 import graft.{State, Tables}
 import graft.operators.Similarity
-import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** One embedding-ingest row under replay. */
@@ -34,13 +33,9 @@ case class ReplayVec(vec_id: Long, embedding: Array[Float])
   * never rescanned, never reshuffled. */
 object StreamAnn {
 
-  // two data micro-batches — one real cross-batch append at the
-  // minimum turnaround cost (the StreamIvm/StreamGraph rationale)
-  private val Chunks = 2
-
   /** Build the base index (all but the vec_id%10==7 cohort) once per
     * fixture, then stream the held-out cohort through the foreachBatch
-    * append in [[Chunks]] micro-batches. */
+    * append in [[StreamReplay.Chunks]] micro-batches. */
   private[streaming] def ensureStreamedIndex(spark: SparkSession,
       dir: String): String = {
     val t = Tables(spark, dir)
@@ -53,31 +48,9 @@ object StreamAnn {
           .select($"vec_id", $"embedding")
           .orderBy($"vec_id").as[ReplayVec].collect().toSeq
       }
-      val chunks =
-        if (deltaRows.isEmpty) Seq(Seq.empty[ReplayVec])
-        else deltaRows.grouped(
-          math.max(1, (deltaRows.length + Chunks - 1) / Chunks)).toSeq
-      val ss = spark.newSession()
-      graft.expr.GraftFunctions.register(ss)
-      ss.conf.set("spark.sql.shuffle.partitions", "4")
-      ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      implicit val sqlCtx: SQLContext = ss.sqlContext
-      val input = MemoryStream[ReplayVec]
-      val ckDir = StreamReplay.checkpointDir("graft_stream_ann_")
-      val q = input.toDS().writeStream
-        .option("checkpointLocation", ckDir.getPath)
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[ReplayVec], _: Long) =>
-            Similarity.updateAnnIndex(batch.toDF(), col("vec_id"),
-              col("embedding"), name)
-            (): Unit
-        }
-        .start()
-      try {
-        chunks.foreach { c => input.addData(c); q.processAllAvailable() }
-      } finally {
-        q.stop()
-        graft.Tables.deleteRec(ckDir)
+      StreamReplay.fold(spark, deltaRows) { _ =>
+        (batch => Similarity.updateAnnIndex(batch.toDF(), col("vec_id"),
+          col("embedding"), name), () => ())
       }
       // the appends ran in the cloned streaming session; the CALLER's
       // session already holds a relation-cache snapshot of the index

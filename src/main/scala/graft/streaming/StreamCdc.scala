@@ -1,8 +1,7 @@
 package graft.streaming
 
 import graft.operators.Cdc
-import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Streaming CDC upsert materialization — the production shape for
@@ -29,30 +28,21 @@ import org.apache.spark.sql.functions._
 object StreamCdc {
 
   /** q172 — replay the first-week event change log in
-    * [[StreamReplay.EventChunks]] micro-batches through a
+    * [[StreamReplay.Chunks]] micro-batches through a
     * foreachBatch upsert; return the final maintained snapshot. Must
     * hash-equal the batch latest-wins snapshot of the same slice. */
   def cdcUpsert(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val (slice, _) = StreamReplay.eventSlice(spark, dir)
-    val chunks = StreamReplay.chunked(slice, StreamReplay.EventChunks)
-    val ss = spark.newSession()
-    graft.expr.GraftFunctions.register(ss)
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    implicit val sqlCtx: SQLContext = ss.sqlContext
-    val input = MemoryStream[ReplayEvent]
-    // the maintained snapshot — swapped per micro-batch, eagerly
-    // checkpointed so lineage/CacheManager never see a growing chain.
-    // @volatile: written on the stream-execution thread inside
-    // foreachBatch, read by the caller thread after stop() — make the
-    // cross-thread publication explicit rather than riding on
-    // StreamExecution's internal locking
-    @volatile var snapshot: Option[DataFrame] = None
-    val ckDir = StreamReplay.checkpointDir("graft_stream_cdc_")
-    val q = input.toDS().writeStream
-      .option("checkpointLocation", ckDir.getPath)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[ReplayEvent], _: Long) =>
+    val snap = StreamReplay.fold(spark, slice) { _ =>
+      // the maintained snapshot — swapped per micro-batch, eagerly
+      // checkpointed so lineage/CacheManager never see a growing chain.
+      // @volatile: written on the stream-execution thread inside
+      // foreachBatch, read by the caller thread after the last batch —
+      // make the cross-thread publication explicit rather than riding
+      // on StreamExecution's internal locking
+      @volatile var snapshot: Option[DataFrame] = None
+      (batch => {
         val log = batch
           .select($"user_id".as("key"),
             graft.functions.TimeFunctions.tsMicros($"ts").as("us"),
@@ -60,21 +50,9 @@ object StreamCdc {
             when($"event_type" === "error", "D").otherwise("U").as("op"),
             $"value", $"event_type".as("etype"))
         snapshot = Some(Cdc.mergeApply(snapshot, log).localCheckpoint(true))
-        (): Unit
-      }
-      .start()
-    try {
-      chunks.foreach { c => input.addData(c); q.processAllAvailable() }
-    } finally {
-      q.stop()
-      graft.Tables.deleteRec(ckDir)
-    }
-    val snap = snapshot.getOrElse(
-      sys.error("stream produced no batches — empty fixture slice?"))
-    // re-home the result on the CALLER's session (the child session's
-    // plan would otherwise carry its private conf into the suite)
-    val rows = java.util.Arrays.asList(snap.collect(): _*)
-    spark.createDataFrame(rows, snap.schema)
+      }, () => snapshot)
+    }.getOrElse(sys.error("stream produced no batches — empty fixture slice?"))
+    StreamReplay.rehome(spark, snap)
       .select($"key".as("user_id"), $"value", $"etype",
         timestamp_micros($"us").as("updated_ts"))
       .orderBy($"user_id")
@@ -94,18 +72,9 @@ object StreamCdc {
   def scd2Stream(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val (slice, _) = StreamReplay.eventSlice(spark, dir)
-    val chunks = StreamReplay.chunked(slice, StreamReplay.EventChunks)
-    val ss = spark.newSession()
-    graft.expr.GraftFunctions.register(ss)
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    implicit val sqlCtx: SQLContext = ss.sqlContext
-    val input = MemoryStream[ReplayEvent]
-    @volatile var dim: Option[DataFrame] = None
-    val ckDir = StreamReplay.checkpointDir("graft_stream_scd2_")
-    val q = input.toDS().writeStream
-      .option("checkpointLocation", ckDir.getPath)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[ReplayEvent], _: Long) =>
+    val history = StreamReplay.fold(spark, slice) { _ =>
+      @volatile var dim: Option[DataFrame] = None
+      (batch => {
         val log = batch
           .select($"user_id".as("key"),
             graft.functions.TimeFunctions.tsMicros($"ts").as("us"),
@@ -116,19 +85,9 @@ object StreamCdc {
           case None    => Cdc.scd2Over(log)
           case Some(d) => Cdc.scd2Increment(d, log)
         }).localCheckpoint(true))
-        (): Unit
-      }
-      .start()
-    try {
-      chunks.foreach { c => input.addData(c); q.processAllAvailable() }
-    } finally {
-      q.stop()
-      graft.Tables.deleteRec(ckDir)
-    }
-    val d = dim.getOrElse(
-      sys.error("stream produced no batches — empty fixture slice?"))
-    val rows = java.util.Arrays.asList(d.collect(): _*)
-    spark.createDataFrame(rows, d.schema)
+      }, () => dim)
+    }.getOrElse(sys.error("stream produced no batches — empty fixture slice?"))
+    StreamReplay.rehome(spark, history)
       .select($"key".as("user_id"), $"value", $"etype",
         timestamp_micros($"valid_from_us").as("valid_from"),
         timestamp_micros($"valid_to_us").as("valid_to"), $"is_current")

@@ -2,8 +2,7 @@ package graft.streaming
 
 import graft.{State, Tables}
 import graft.operators.Graph
-import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** One undirected edge under replay ([[graft.operators.Graph]]
@@ -33,16 +32,8 @@ case class ReplayEdgeOp(op: String, a: Long, b: Long)
   * the labeling is read exchange-free, never rescanned wholesale. */
 object StreamGraph {
 
-  // TWO data micro-batches: the cross-batch composability claim is
-  // batch-count-blind (StreamGraphSpec pins stream ≡ one-shot ≡
-  // closure with its own chunking), and each batch of the CC fold is
-  // round-latency-bound — ~8 pointer-jumping rounds of driver-paced
-  // tiny jobs — so the replay lane's wall is batch count × round
-  // latency, not data. Two batches keep one real cross-batch merge.
-  private val Chunks = 2
-
   /** q210 — stream the q202 delta slice ((a+b) mod 5 ≡ 0 co-purchase
-    * edges) through the foreachBatch CC fold in [[Chunks]]
+    * edges) through the foreachBatch CC fold in [[StreamReplay.Chunks]]
     * micro-batches over the persisted base labeling; return the final
     * (c_custkey, component) shaped exactly like q202's output. */
   def ccStream(spark: SparkSession, dir: String): DataFrame = {
@@ -54,34 +45,14 @@ object StreamGraph {
         .filter(($"a" + $"b") % 5 === 0)
         .orderBy($"a", $"b").as[ReplayEdge].collect().toSeq
     }
-    val chunks =
-      if (deltaRows.isEmpty) Seq(Seq.empty[ReplayEdge])
-      else deltaRows.grouped(
-        math.max(1, (deltaRows.length + Chunks - 1) / Chunks)).toSeq
-    val ss = spark.newSession()
-    graft.expr.GraftFunctions.register(ss)
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    implicit val sqlCtx: SQLContext = ss.sqlContext
-    val input = MemoryStream[ReplayEdge]
-    @volatile var state: DataFrame = ss.table(table).localCheckpoint(true)
-    val ckDir = StreamReplay.checkpointDir("graft_stream_cc_")
-    val q = input.toDS().writeStream
-      .option("checkpointLocation", ckDir.getPath)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[ReplayEdge], _: Long) =>
+    val labeling = StreamReplay.fold(spark, deltaRows) { ss =>
+      @volatile var state: DataFrame = ss.table(table).localCheckpoint(true)
+      (batch => {
         state = Graph.ccIncrementFrames(batch.toDF(), state)
           .localCheckpoint(true)
-        (): Unit
-      }
-      .start()
-    try {
-      chunks.foreach { c => input.addData(c); q.processAllAvailable() }
-    } finally {
-      q.stop()
-      graft.Tables.deleteRec(ckDir)
+      }, () => state)
     }
-    val rows = java.util.Arrays.asList(state.collect(): _*)
-    spark.createDataFrame(rows, state.schema)
+    StreamReplay.rehome(spark, labeling)
       .select($"id".as("c_custkey"), $"component")
       .orderBy($"c_custkey")
   }
@@ -146,32 +117,14 @@ object StreamGraph {
       boundedChanges(t)
         .orderBy($"a", $"b", $"op").as[ReplayEdgeOp].collect().toSeq
     }
-    // TWO micro-batches, not the family's three: each delete batch
-    // pays a full ~8-round CC re-solve of its touched components
-    // (round-latency-bound — the fold wall is batch count × rounds ×
-    // per-action overhead, not data), and the composability claim is
-    // batch-count-blind (the spec pins stream ≡ one-shot either way)
-    val nChunks = 2
-    val chunks =
-      if (changeRows.isEmpty) Seq(Seq.empty[ReplayEdgeOp])
-      else changeRows.grouped(
-        math.max(1, (changeRows.length + nChunks - 1) / nChunks)).toSeq
-    val ss = spark.newSession()
-    graft.expr.GraftFunctions.register(ss)
     // 1 shuffle partition, not 4: the fold's wall is CC-round
     // latency over the BOUNDED subgraph — every stage is tiny, and
     // per-stage scheduler overhead scales with task count
-    ss.conf.set("spark.sql.shuffle.partitions", "1")
-    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    implicit val sqlCtx: SQLContext = ss.sqlContext
-    val input = MemoryStream[ReplayEdgeOp]
-    @volatile var state: DataFrame = ss.table(table).localCheckpoint(true)
-    @volatile var stateEdges: DataFrame =
-      ss.table(s"${table}_edges").localCheckpoint(true)
-    val ckDir = StreamReplay.checkpointDir("graft_stream_ccr_")
-    val q = input.toDS().writeStream
-      .option("checkpointLocation", ckDir.getPath)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[ReplayEdgeOp], _: Long) =>
+    val labeling = StreamReplay.fold(spark, changeRows, partitions = 1) { ss =>
+      @volatile var state: DataFrame = ss.table(table).localCheckpoint(true)
+      @volatile var stateEdges: DataFrame =
+        ss.table(s"${table}_edges").localCheckpoint(true)
+      (batch => {
         val d = batch.toDF()
         val ins = d.filter(col("op") === "I").select(col("a"), col("b"))
         val del = d.filter(col("op") === "D").select(col("a"), col("b"))
@@ -215,17 +168,9 @@ object StreamGraph {
           .select(col("component"), col("a"), col("b"))
         stateEdges = untouched.unionByName(relabeled).localCheckpoint(true)
         state = labels
-        (): Unit
-      }
-      .start()
-    try {
-      chunks.foreach { c => input.addData(c); q.processAllAvailable() }
-    } finally {
-      q.stop()
-      graft.Tables.deleteRec(ckDir)
+      }, () => state)
     }
-    val rows = java.util.Arrays.asList(state.collect(): _*)
-    spark.createDataFrame(rows, state.schema)
+    StreamReplay.rehome(spark, labeling)
       .select($"id".as("c_custkey"), $"component")
       .orderBy($"c_custkey")
   }

@@ -2,8 +2,7 @@ package graft.streaming
 
 import graft.{State, Tables}
 import graft.operators.Ivm
-import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** One order-stream row under replay (top-level: encoder codegen). */
@@ -42,13 +41,6 @@ case class ReplayMultiChange(fkey: Long, change: String,
   */
 object StreamIvm {
 
-  // TWO data micro-batches (was three): every fold in this family is
-  // associative and its oracle chunk-blind — the specs pin chunked ≡
-  // one-shot with their own chunking — while the replay lane's wall
-  // is micro-batch turnaround × batch count. Two keeps a real
-  // cross-batch merge at the minimum turnaround cost.
-  private val Chunks = 2
-
   /** Replayed-slice bound (the q114 recipe): FIXED, so the harness's
     * driver-side collect is constant in SF — covers the full
     * sf0.001/0.01/0.1 corpora (order keys < 2²⁰ there, bound
@@ -58,9 +50,10 @@ object StreamIvm {
     * foreachBatch fold itself consumes any streaming Dataset. */
   private[streaming] val MaxStreamOrderKey = 1L << 20
 
-  /** q177 — replay the bounded order slice date-ordered in [[Chunks]]
-    * micro-batches through the foreachBatch view fold; return the
-    * final view shaped exactly like q167's output. */
+  /** q177 — replay the bounded order slice date-ordered in
+    * [[StreamReplay.Chunks]] micro-batches through the foreachBatch
+    * view fold; return the final view shaped exactly like q167's
+    * output. */
   def orderRollup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val slice = State.memo(spark.sparkContext, s"q177:$dir") {
@@ -70,38 +63,19 @@ object StreamIvm {
         .orderBy($"o_orderdate", $"o_orderkey")
         .as[ReplayOrder].collect().toSeq
     }
-    val chunks =
-      if (slice.isEmpty) Seq(Seq.empty[ReplayOrder])
-      else slice.grouped(math.max(1, (slice.length + Chunks - 1) / Chunks)).toSeq
-    val ss = spark.newSession()
-    graft.expr.GraftFunctions.register(ss)
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    implicit val sqlCtx: SQLContext = ss.sqlContext
-    val input = MemoryStream[ReplayOrder]
-    // @volatile: written on the stream-execution thread, read by the
-    // caller thread after stop() — explicit cross-thread publication
-    @volatile var view: Option[DataFrame] = None
-    val ckDir = StreamReplay.checkpointDir("graft_stream_ivm_")
-    val q = input.toDS().writeStream
-      .option("checkpointLocation", ckDir.getPath)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[ReplayOrder], _: Long) =>
+    val rollup = StreamReplay.fold(spark, slice) { _ =>
+      // @volatile: written on the stream-execution thread, read by the
+      // caller thread after the last batch — explicit cross-thread
+      // publication
+      @volatile var view: Option[DataFrame] = None
+      (batch => {
         val p = Ivm.partials(batch.toDF(), col("o_custkey"),
           floor(col("o_totalprice") * 100 + 0.5).cast("long"))
         view = Some(view.fold(p)(v => Ivm.mergePartials(v, p))
           .localCheckpoint(true))
-        (): Unit
-      }
-      .start()
-    try {
-      chunks.foreach { c => input.addData(c); q.processAllAvailable() }
-    } finally {
-      q.stop()
-      graft.Tables.deleteRec(ckDir)
-    }
-    val v = view.getOrElse(sys.error("stream produced no batches"))
-    val rows = java.util.Arrays.asList(v.collect(): _*)
-    spark.createDataFrame(rows, v.schema)
+      }, () => view)
+    }.getOrElse(sys.error("stream produced no batches"))
+    StreamReplay.rehome(spark, rollup)
       .select($"key".as("o_custkey"), $"n".as("n_orders"),
         ($"s".cast("double") / 100.0).as("total_price"),
         ($"mn".cast("double") / 100.0).as("min_price"),
@@ -137,24 +111,12 @@ object StreamIvm {
             .filter(col("fkey") < MaxStreamOrderKey))
         .as[ReplayFactChange].collect().toSeq.sortBy(_.fkey)
     }
-    val chunks =
-      if (deltaRows.isEmpty) Seq(Seq.empty[ReplayFactChange])
-      else deltaRows.grouped(
-        math.max(1, (deltaRows.length + Chunks - 1) / Chunks)).toSeq
-    val ss = spark.newSession()
-    graft.expr.GraftFunctions.register(ss)
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    implicit val sqlCtx: SQLContext = ss.sqlContext
-    val input = MemoryStream[ReplayFactChange]
-    @volatile var facts: DataFrame = Ivm.orderFacts(Tables(ss, dir))
-      .filter(col("fkey") < MaxStreamOrderKey).localCheckpoint(true)
-    @volatile var view: DataFrame =
-      Ivm.partials(facts, col("key"), col("q")).localCheckpoint(true)
-    val ckDir = StreamReplay.checkpointDir("graft_stream_ivmr_")
-    val q = input.toDS().writeStream
-      .option("checkpointLocation", ckDir.getPath)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[ReplayFactChange], _: Long) =>
+    val rollup = StreamReplay.fold(spark, deltaRows) { ss =>
+      @volatile var facts: DataFrame = Ivm.orderFacts(Tables(ss, dir))
+        .filter(col("fkey") < MaxStreamOrderKey).localCheckpoint(true)
+      @volatile var view: DataFrame =
+        Ivm.partials(facts, col("key"), col("q")).localCheckpoint(true)
+      (batch => {
         val d = batch.toDF()
         // view first (its re-agg reads the PRE-batch facts), then the
         // fact roll-forward batch N+1 will aggregate against
@@ -166,17 +128,9 @@ object StreamIvm {
         facts = facts
           .join(broadcast(retracted), Seq("fkey"), "left_anti")
           .unionByName(adds).localCheckpoint(true)
-        (): Unit
-      }
-      .start()
-    try {
-      chunks.foreach { c => input.addData(c); q.processAllAvailable() }
-    } finally {
-      q.stop()
-      graft.Tables.deleteRec(ckDir)
+      }, () => view)
     }
-    val rows = java.util.Arrays.asList(view.collect(): _*)
-    spark.createDataFrame(rows, view.schema)
+    StreamReplay.rehome(spark, rollup)
       .select($"key".as("o_custkey"), $"n".as("n_orders"),
         ($"s".cast("double") / 100.0).as("total_price"),
         ($"mn".cast("double") / 100.0).as("min_price"),
@@ -211,27 +165,15 @@ object StreamIvm {
       MultiIvm.orderMultiDelta(boundedFacts)
         .as[ReplayMultiChange].collect().toSeq.sortBy(_.fkey)
     }
-    val chunks =
-      if (deltaRows.isEmpty) Seq(Seq.empty[ReplayMultiChange])
-      else deltaRows.grouped(
-        math.max(1, (deltaRows.length + Chunks - 1) / Chunks)).toSeq
-    val ss = spark.newSession()
-    graft.expr.GraftFunctions.register(ss)
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    implicit val sqlCtx: SQLContext = ss.sqlContext
-    val input = MemoryStream[ReplayMultiChange]
-    val baseFacts = MultiIvm.orderMultiFacts(Tables(ss, dir))
-      .filter(col("fkey") < MaxStreamOrderKey).localCheckpoint(true)
-    @volatile var view: DataFrame =
-      MultiIvm.multiPartials(baseFacts, Ms, Ds).localCheckpoint(true)
-    @volatile var mult: DataFrame = baseFacts
-      .groupBy(col("key"), col("prio").as("v"))
-      .agg(count(lit(1)).as("m")).localCheckpoint(true)
-    val ckDir = StreamReplay.checkpointDir("graft_stream_mivm_")
-    val q = input.toDS().writeStream
-      .option("checkpointLocation", ckDir.getPath)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[ReplayMultiChange], _: Long) =>
+    val rollup = StreamReplay.fold(spark, deltaRows) { ss =>
+      val baseFacts = MultiIvm.orderMultiFacts(Tables(ss, dir))
+        .filter(col("fkey") < MaxStreamOrderKey).localCheckpoint(true)
+      @volatile var view: DataFrame =
+        MultiIvm.multiPartials(baseFacts, Ms, Ds).localCheckpoint(true)
+      @volatile var mult: DataFrame = baseFacts
+        .groupBy(col("key"), col("prio").as("v"))
+        .agg(count(lit(1)).as("m")).localCheckpoint(true)
+      (batch => {
         val d = batch.toDF()
         // view first (its cd re-derivation reads the PRE-batch
         // sidecar), then roll the sidecar forward for batch N+1
@@ -245,18 +187,10 @@ object StreamIvm {
           .unionByName(MultiIvm.updatedMultiplicities(d, mult, "prio"))
           .localCheckpoint(true)
         view = merged
-        (): Unit
-      }
-      .start()
-    try {
-      chunks.foreach { c => input.addData(c); q.processAllAvailable() }
-    } finally {
-      q.stop()
-      graft.Tables.deleteRec(ckDir)
+      }, () => view)
     }
-    val rows = java.util.Arrays.asList(view.collect(): _*)
     val S = 1L << 30
-    val v = spark.createDataFrame(rows, view.schema)
+    val v = StreamReplay.rehome(spark, rollup)
     val nD = col("n").cast("double")
     val sD = col("s_cents").cast("double")
     val ssq = col("ssh_cents").cast("double") * lit(S.toDouble) +
@@ -270,16 +204,6 @@ object StreamIvm {
       .orderBy($"o_custkey")
   }
 
-  /** q199 — STREAMING dimension-move maintenance: q195's fold fed by a
-    * stream of SCD1 dim updates. The per-key aggregate index is STATIC
-    * under moves (a move changes a key's group, never its partial), so
-    * the per-batch fold is pure signed addition into the group view —
-    * associative across any chunking of a valid move log (each move's
-    * g_old is the key's group at its position in the log), which makes
-    * stream(b1…bk) ≡ one-shot batch(∪bᵢ) ≡ the post-move scratch
-    * rollup. q199's oracle is q195's verbatim; StreamIvmSpec pins the
-    * stream ≡ one-shot equality. Per batch: O(batch) view work + one
-    * narrow scan of the per-key index — facts never in the loop. */
   /** q211 — STREAMING multi-measure dimension-move maintenance:
     * q206's fold fed by the SCD1 update stream, completing the
     * family-matrix row q207 completed for fact deltas. Each
@@ -309,22 +233,11 @@ object StreamIvm {
       Ivm.nationMoveDelta(t).as[ReplayDimMove]
         .collect().toSeq.sortBy(_.key)
     }
-    val chunks =
-      if (moves.isEmpty) Seq(Seq.empty[ReplayDimMove])
-      else moves.grouped(math.max(1, (moves.length + Chunks - 1) / Chunks)).toSeq
-    val ss = spark.newSession()
-    graft.expr.GraftFunctions.register(ss)
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    implicit val sqlCtx: SQLContext = ss.sqlContext
-    val input = MemoryStream[ReplayDimMove]
-    val (view0, gmult0) = MultiIvm.nationMultiBase(Tables(ss, dir), perKeyTable)
-    @volatile var view: DataFrame = view0.localCheckpoint(true)
-    @volatile var gmult: DataFrame = gmult0.localCheckpoint(true)
-    val ckDir = StreamReplay.checkpointDir("graft_stream_mdimmove_")
-    val q = input.toDS().writeStream
-      .option("checkpointLocation", ckDir.getPath)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[ReplayDimMove], _: Long) =>
+    val rollup = StreamReplay.fold(spark, moves) { ss =>
+      val (view0, gmult0) = MultiIvm.nationMultiBase(Tables(ss, dir), perKeyTable)
+      @volatile var view: DataFrame = view0.localCheckpoint(true)
+      @volatile var gmult: DataFrame = gmult0.localCheckpoint(true)
+      (batch => {
         val d = batch.toDF()
         // view first (its cd re-derivation reads the PRE-batch group
         // multiplicities), then roll the sidecar forward for batch N+1
@@ -339,18 +252,10 @@ object StreamIvm {
             ss.table(s"${perKeyTable}_mult_prio"), d, touched, "prio"))
           .localCheckpoint(true)
         view = merged
-        (): Unit
-      }
-      .start()
-    try {
-      chunks.foreach { c => input.addData(c); q.processAllAvailable() }
-    } finally {
-      q.stop()
-      graft.Tables.deleteRec(ckDir)
+      }, () => view)
     }
-    val rows = java.util.Arrays.asList(view.collect(): _*)
     val S = 1L << 30
-    val v = spark.createDataFrame(rows, view.schema)
+    val v = StreamReplay.rehome(spark, rollup)
     val nD = col("n").cast("double")
     val sD = col("s_cents").cast("double")
     val ssq = col("ssh_cents").cast("double") * lit(S.toDouble) +
@@ -390,29 +295,18 @@ object StreamIvm {
       Ivm.nationMoveDelta(t).as[ReplayDimMove]
         .collect().toSeq.sortBy(_.key)
     }
-    val chunks =
-      if (moves.isEmpty) Seq(Seq.empty[ReplayDimMove])
-      else moves.grouped(math.max(1, (moves.length + Chunks - 1) / Chunks)).toSeq
-    val ss = spark.newSession()
-    graft.expr.GraftFunctions.register(ss)
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    implicit val sqlCtx: SQLContext = ss.sqlContext
-    val input = MemoryStream[ReplayDimMove]
-    val ts = Tables(ss, dir)
-    val (view0, gmult0) = MultiIvm.nationMultiBaseFull(ts, perKeyTable)
-    @volatile var view: DataFrame = view0.localCheckpoint(true)
-    @volatile var gmult: DataFrame = gmult0.localCheckpoint(true)
-    // the running (key, g) membership — starts at the base assignment
-    @volatile var mapping: DataFrame = ts.customer
-      .select($"c_custkey".as("key"), $"c_nationkey")
-      .join(broadcast(ts.nation.select($"n_nationkey".as("c_nationkey"),
-        $"n_name".as("g"))), Seq("c_nationkey"))
-      .select($"key", $"g").localCheckpoint(true)
-    val ckDir = StreamReplay.checkpointDir("graft_stream_mdmf_")
-    val q = input.toDS().writeStream
-      .option("checkpointLocation", ckDir.getPath)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[ReplayDimMove], _: Long) =>
+    val rollup = StreamReplay.fold(spark, moves) { ss =>
+      val ts = Tables(ss, dir)
+      val (view0, gmult0) = MultiIvm.nationMultiBaseFull(ts, perKeyTable)
+      @volatile var view: DataFrame = view0.localCheckpoint(true)
+      @volatile var gmult: DataFrame = gmult0.localCheckpoint(true)
+      // the running (key, g) membership — starts at the base assignment
+      @volatile var mapping: DataFrame = ts.customer
+        .select($"c_custkey".as("key"), $"c_nationkey")
+        .join(broadcast(ts.nation.select($"n_nationkey".as("c_nationkey"),
+          $"n_name".as("g"))), Seq("c_nationkey"))
+        .select($"key", $"g").localCheckpoint(true)
+      (batch => {
         val d = batch.toDF()
         // membership first (the merge re-derives min/max under the
         // POST-batch assignment), then the merge against the
@@ -434,18 +328,10 @@ object StreamIvm {
           .localCheckpoint(true)
         view = merged
         mapping = mappingNext
-        (): Unit
-      }
-      .start()
-    try {
-      chunks.foreach { c => input.addData(c); q.processAllAvailable() }
-    } finally {
-      q.stop()
-      graft.Tables.deleteRec(ckDir)
+      }, () => view)
     }
-    val rows = java.util.Arrays.asList(view.collect(): _*)
     val S = 1L << 30
-    val v = spark.createDataFrame(rows, view.schema)
+    val v = StreamReplay.rehome(spark, rollup)
     val nD = col("n").cast("double")
     val sD = col("s_cents").cast("double")
     val ssq = col("ssh_cents").cast("double") * lit(S.toDouble) +
@@ -462,6 +348,16 @@ object StreamIvm {
       .orderBy($"n_name")
   }
 
+  /** q199 — STREAMING dimension-move maintenance: q195's fold fed by a
+    * stream of SCD1 dim updates. The per-key aggregate index is STATIC
+    * under moves (a move changes a key's group, never its partial), so
+    * the per-batch fold is pure signed addition into the group view —
+    * associative across any chunking of a valid move log (each move's
+    * g_old is the key's group at its position in the log), which makes
+    * stream(b1…bk) ≡ one-shot batch(∪bᵢ) ≡ the post-move scratch
+    * rollup. q199's oracle is q195's verbatim; StreamIvmSpec pins the
+    * stream ≡ one-shot equality. Per batch: O(batch) view work + one
+    * narrow scan of the per-key index — facts never in the loop. */
   def nationRevenueDimMoveStream(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val t = Tables(spark, dir)
@@ -470,34 +366,15 @@ object StreamIvm {
       Ivm.nationMoveDelta(t).as[ReplayDimMove]
         .collect().toSeq.sortBy(_.key)
     }
-    val chunks =
-      if (moves.isEmpty) Seq(Seq.empty[ReplayDimMove])
-      else moves.grouped(math.max(1, (moves.length + Chunks - 1) / Chunks)).toSeq
-    val ss = spark.newSession()
-    graft.expr.GraftFunctions.register(ss)
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    implicit val sqlCtx: SQLContext = ss.sqlContext
-    val input = MemoryStream[ReplayDimMove]
-    @volatile var view: DataFrame =
-      Ivm.nationBaseView(Tables(ss, dir), aggTable).localCheckpoint(true)
-    val ckDir = StreamReplay.checkpointDir("graft_stream_dimmove_")
-    val q = input.toDS().writeStream
-      .option("checkpointLocation", ckDir.getPath)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[ReplayDimMove], _: Long) =>
+    val rollup = StreamReplay.fold(spark, moves) { ss =>
+      @volatile var view: DataFrame =
+        Ivm.nationBaseView(Tables(ss, dir), aggTable).localCheckpoint(true)
+      (batch => {
         view = Ivm.mergeDimMove(view, aggTable, batch.toDF())
           .localCheckpoint(true)
-        (): Unit
-      }
-      .start()
-    try {
-      chunks.foreach { c => input.addData(c); q.processAllAvailable() }
-    } finally {
-      q.stop()
-      graft.Tables.deleteRec(ckDir)
+      }, () => view)
     }
-    val rows = java.util.Arrays.asList(view.collect(): _*)
-    spark.createDataFrame(rows, view.schema)
+    StreamReplay.rehome(spark, rollup)
       .select($"g".as("n_name"), $"n".as("n_orders"),
         ($"s".cast("double") / 100.0).as("total_price"))
       .orderBy($"n_name")

@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SQLContext, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.DecimalType
 
 /** One event-stream row under replay (top-level: encoder codegen). */
@@ -35,6 +36,17 @@ case class ReplayDoc(ts: java.sql.Timestamp, doc_id: Long, text: String)
   * cross-micro-batch state merge — the property being verified — is
   * genuinely exercised.
   *
+  * This object is also the one replay harness for the package: every
+  * replay runs in a child session (shared context, private SQLConf,
+  * no-data micro-batches off), fed one chunk per micro-batch through
+  * a MemoryStream, with the query stopped and its tmpfs checkpoint
+  * deleted on the way out. Two sinks sit on it: the append-mode
+  * memory sink the queries below use, and [[fold]], the
+  * `foreachBatch` fold that StreamCdc, StreamIvm, StreamGraph and
+  * StreamAnn roll their state frames forward through. Its one
+  * parameter is the child session's shuffle partition count: 4, or 1
+  * for q213's bounded CC re-solve.
+  *
   * Scale posture: the driver-side collect exists ONLY because
   * MemoryStream is a driver-side test source — the operators under
   * test consume any streaming Dataset unchanged (Kafka/file sources in
@@ -47,17 +59,17 @@ object StreamReplay {
   /** Slice bound for the event-table replays: the first week. */
   private[streaming] val EventCutoff = "2024-01-08 00:00:00"
 
-  /** Data micro-batches per event replay. Two ~3.5-day chunks over
-    * the 7-day slice: the mid-window chunk boundary still splits day
-    * windows across micro-batches, so cross-micro-batch state merge —
-    * the property under test — is exercised, at the minimum batch
-    * count that has a real boundary. (Round 5 ran 8 chunks, rounds
-    * 6-12 ran 3; each extra micro-batch costs per-partition state
-    * store load/commit + offset-log latency, and the replay lane's
-    * batch turnaround, not data volume, sets the bench's makespan —
-    * the streaming specs pin the multi-boundary merge property with
-    * their own chunking.) */
-  private[streaming] val EventChunks = 2
+  /** Data micro-batches per replay. Two is the minimum count with a
+    * real cross-batch boundary: the event replays' mid-slice boundary
+    * still splits day windows across micro-batches, and every
+    * `foreachBatch` fold gets one real cross-batch merge. Each extra
+    * micro-batch costs per-partition state-store load/commit and
+    * offset-log latency (event replays) or a round-latency-bound
+    * re-solve (the graph folds), and the replay lane's wall is batch
+    * turnaround × batch count, not data volume. The folds are
+    * associative with chunk-blind oracles, and the streaming specs pin
+    * the multi-boundary merge property with their own chunking. */
+  private[streaming] val Chunks = 2
 
   /** Planted-copy id offset for the dedup replays — far above any
     * fixture doc_id, so `id < CopyIdOff` marks an original. */
@@ -72,11 +84,14 @@ object StreamReplay {
 
   private val Ctr = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Feed `chunks` through a MemoryStream one micro-batch per chunk,
-    * run `build`'s streaming query in append mode to a memory sink,
-    * and return the sunk rows as a local batch DataFrame. */
-  private def replay[T](spark: SparkSession, chunks: Seq[Seq[T]])(
-      build: Dataset[T] => DataFrame)(implicit enc: Encoder[T]): DataFrame = {
+  /** The one replay harness: feed `chunks` through a MemoryStream one
+    * micro-batch per chunk into the query `start` builds, then hand
+    * back `start`'s read-out. The query is stopped and its checkpoint
+    * deleted whether or not the feed succeeds; a failed micro-batch
+    * fails the call at once, with its cause attached. */
+  private def run[T: Encoder, R](spark: SparkSession, chunks: Seq[Seq[T]],
+      partitions: Int)(
+      start: (SparkSession, Dataset[T]) => (DataStreamWriter[_], () => R)): R = {
     // A micro-batch's cost here is per-partition bookkeeping (state
     // store load/commit per shuffle partition per batch), not data.
     // Run the stream in a CHILD session (shared context, private
@@ -90,7 +105,7 @@ object StreamReplay {
     // graft's native expressions (ts_micros, simhash64, …) must be
     // re-registered or any build lambda using them fails resolution
     graft.expr.GraftFunctions.register(ss)
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
+    ss.conf.set("spark.sql.shuffle.partitions", partitions.toString)
     // Every chunk otherwise triggers a trailing zero-row micro-batch
     // just to re-evaluate under the advanced watermark — doubling the
     // batch count. The replay instead feeds the flush sentinel TWICE
@@ -100,38 +115,67 @@ object StreamReplay {
     ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     implicit val sqlCtx: SQLContext = ss.sqlContext
     val input = MemoryStream[T]
-    val name = "graft_replay_" + Ctr.incrementAndGet()
-    val ckDir = checkpointDir(name + "_")
-    val q = build(input.toDS())
-      .writeStream.outputMode("append").format("memory").queryName(name)
-      .option("checkpointLocation", ckDir.getPath).start()
+    val sink = start(ss, input.toDS())
+    val ckDir = checkpointDir()
+    val q = sink._1.option("checkpointLocation", ckDir.getPath).start()
     try {
       chunks.foreach { c => input.addData(c); q.processAllAvailable() }
-      val sunk = ss.table(name)
-      val rows = java.util.Arrays.asList(sunk.collect(): _*)
-      spark.createDataFrame(rows, sunk.schema)
+      sink._2()
     } finally {
       q.stop()
-      ss.catalog.dropTempView(name)
       Tables.deleteRec(ckDir)
     }
   }
 
-  /** A fresh checkpoint directory for a replay, named `prefix` plus a
-    * random suffix. The checkpoint (offset/commit logs + state
-    * snapshots, fsync'd every micro-batch) goes on tmpfs when there is
-    * one: replay durability is meaningless — determinism comes from
-    * the fixed chunking — and the per-batch log fsync is otherwise the
-    * replay's floor. */
-  private[streaming] def checkpointDir(prefix: String): java.io.File = {
+  /** Replay `chunks` through `build`'s streaming query in append mode
+    * to a memory sink and return the sunk rows as a local batch
+    * DataFrame on the caller's session. */
+  private def replay[T: Encoder](spark: SparkSession, chunks: Seq[Seq[T]])(
+      build: Dataset[T] => DataFrame): DataFrame = {
+    val name = "graft_replay_" + Ctr.incrementAndGet()
+    run(spark, chunks, 4) { (ss, ds) =>
+      (build(ds).writeStream.outputMode("append").format("memory").queryName(name),
+        () => try rehome(spark, ss.table(name)) finally ss.catalog.dropTempView(name))
+    }
+  }
+
+  /** Fold `rows`, in [[Chunks]] ordered micro-batches, through a
+    * `foreachBatch` step; return the fold's read-out. `init` gets the
+    * child session — build initial state frames on it, since its
+    * partition count shapes their plans — and returns the per-batch
+    * step plus the read-out, taken once the last batch is folded.
+    * State the step writes is read on the caller's thread: keep it in
+    * `@volatile` vars. `partitions` is the child session's shuffle
+    * partition count. */
+  private[streaming] def fold[T: Encoder, R](spark: SparkSession, rows: Seq[T],
+      partitions: Int = 4)(
+      init: SparkSession => (Dataset[T] => Unit, () => R)): R =
+    run(spark, chunked(rows, Chunks), partitions) { (ss, ds) =>
+      val (step, readOut) = init(ss)
+      val each: (Dataset[T], Long) => Unit = (batch, _) => step(batch)
+      (ds.writeStream.foreachBatch(each), readOut)
+    }
+
+  /** Collect `df` and re-create it on `spark`: a replay's result must
+    * not carry the child session's private conf into the caller's
+    * plans. */
+  private[streaming] def rehome(spark: SparkSession, df: DataFrame): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+
+  /** A fresh checkpoint directory for a replay. The checkpoint
+    * (offset/commit logs + state snapshots, fsync'd every micro-batch)
+    * goes on tmpfs when there is one: replay durability is meaningless
+    * — determinism comes from the fixed chunking — and the per-batch
+    * log fsync is otherwise the replay's floor. */
+  private def checkpointDir(): java.io.File = {
     val shm = new java.io.File("/dev/shm")
     new java.io.File(
       if (shm.isDirectory) shm.getPath else System.getProperty("java.io.tmpdir"),
-      prefix + java.util.UUID.randomUUID())
+      "graft_replay_" + java.util.UUID.randomUUID())
   }
 
   /** Split an ordered slice into `n` equal ts-contiguous chunks. */
-  private[streaming] def chunked[T](rows: Seq[T], n: Int): Seq[Seq[T]] =
+  private def chunked[T](rows: Seq[T], n: Int): Seq[Seq[T]] =
     if (rows.isEmpty) Seq(Seq.empty)
     else rows.grouped(math.max(1, (rows.length + n - 1) / n)).toSeq
 
@@ -177,13 +221,13 @@ object StreamReplay {
 
   /** q111 — tumbling event-time windows with watermark finalization:
     * per-day count + DECIMAL-exact value sum per event type, computed
-    * by the streaming engine across [[EventChunks]] multi-day
+    * by the streaming engine across [[Chunks]] multi-day
     * micro-batches. Oracle: the identical batch aggregation (q20's
     * recipe) over the slice. */
   def eventWindows(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val (slice, sentinel) = eventSlice(spark, dir)
-    val out = replay(spark, withFlush(chunked(slice, EventChunks), sentinel)) { ds =>
+    val out = replay(spark, withFlush(chunked(slice, Chunks), sentinel)) { ds =>
       ds.withWatermark("ts", "1 hour")
         .groupBy(window($"ts", "1 day"), $"event_type")
         .agg(count(lit(1)).as("n_events"),
@@ -204,7 +248,7 @@ object StreamReplay {
   def heavyHitters(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
     import spark.implicits._
     val (slice, sentinel) = eventSlice(spark, dir)
-    val finalized = replay(spark, withFlush(chunked(slice, EventChunks), sentinel)) { ds =>
+    val finalized = replay(spark, withFlush(chunked(slice, Chunks), sentinel)) { ds =>
       StreamHeavyHitters.windowedCandidates(
         ds.toDF(), "ts", "event_type", "1 day", "1 hour", k)
     }.filter($"window_start" < to_timestamp(lit(EventCutoff)))
@@ -235,7 +279,7 @@ object StreamReplay {
     import spark.implicits._
     val qs = Seq(0.25, 0.5, 0.75, 0.95)
     val (slice, sentinel) = eventSlice(spark, dir)
-    val finalized = replay(spark, withFlush(chunked(slice, EventChunks), sentinel)) { ds =>
+    val finalized = replay(spark, withFlush(chunked(slice, Chunks), sentinel)) { ds =>
       StreamQuantiles.windowed(ds.toDF(), "ts", "value", "1 day", "1 hour",
         qs, accuracy)
     }.filter($"window_start" < to_timestamp(lit(EventCutoff)))
@@ -375,7 +419,7 @@ object StreamReplay {
       horizon: String = "6 hours"): DataFrame = {
     import spark.implicits._
     val (slice, sentinel) = eventSlice(spark, dir)
-    val out = replay(spark, withFlush(chunked(slice, EventChunks), sentinel)) { ds =>
+    val out = replay(spark, withFlush(chunked(slice, Chunks), sentinel)) { ds =>
       val df = ds.toDF()
       EventStream.errorsWithRecentClicks(
         df.filter($"event_type" === "error"),
@@ -397,7 +441,7 @@ object StreamReplay {
       gapSeconds: Long = 21600L): DataFrame = {
     import spark.implicits._
     val (slice, sentinel) = eventSlice(spark, dir)
-    val out = replay(spark, withFlush(chunked(slice, EventChunks), sentinel)) { ds =>
+    val out = replay(spark, withFlush(chunked(slice, Chunks), sentinel)) { ds =>
       // The sentinel flows INTO the stateful operator (as user -1,
       // dropped from the output): a pre-watermark filter is useless —
       // Catalyst pushes deterministic predicates THROUGH
@@ -430,7 +474,7 @@ object StreamReplay {
   def streamAsOfJoin(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val (slice, sentinel) = eventSlice(spark, dir)
-    val out = replay(spark, withFlush(chunked(slice, EventChunks), sentinel)) { ds =>
+    val out = replay(spark, withFlush(chunked(slice, Chunks), sentinel)) { ds =>
       val events = ds.withWatermark("ts", "0 seconds")
         .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
         .as[UserEvent]
@@ -453,7 +497,7 @@ object StreamReplay {
       alpha: Double = 0.5): DataFrame = {
     import spark.implicits._
     val (slice, sentinel) = eventSlice(spark, dir)
-    val out = replay(spark, withFlush(chunked(slice, EventChunks), sentinel)) { ds =>
+    val out = replay(spark, withFlush(chunked(slice, Chunks), sentinel)) { ds =>
       val events = ds.withWatermark("ts", "0 seconds")
         .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
         .as[UserEvent]
@@ -481,7 +525,7 @@ object StreamReplay {
       horizon: String = "6 hours"): DataFrame = {
     import spark.implicits._
     val (slice, sentinel) = eventSlice(spark, dir)
-    val out = replay(spark, withFlush(chunked(slice, EventChunks), sentinel)) { ds =>
+    val out = replay(spark, withFlush(chunked(slice, Chunks), sentinel)) { ds =>
       val df = ds.toDF()
       // sentinel passes BOTH filters: a pre-watermark filter that
       // drops it would silently freeze event time (the q118 lesson)
@@ -515,7 +559,7 @@ object StreamReplay {
     import spark.implicits._
     val (slice, sentinel) = eventSlice(spark, dir)
     val rows = array((0 until depth).map(lit): _*)
-    val cells = replay(spark, withFlush(chunked(slice, EventChunks), sentinel)) { ds =>
+    val cells = replay(spark, withFlush(chunked(slice, Chunks), sentinel)) { ds =>
       // the production operator, replayed verbatim (StreamCms is the
       // facade-reachable form; this keeps q124 exercising it)
       StreamCms.windowedCells(ds.toDF(), "ts", $"user_id",
@@ -558,7 +602,7 @@ object StreamReplay {
   def streamAnomalies(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val (slice, sentinel) = eventSlice(spark, dir)
-    val out = replay(spark, withFlush(chunked(slice, EventChunks), sentinel)) { ds =>
+    val out = replay(spark, withFlush(chunked(slice, Chunks), sentinel)) { ds =>
       val events = ds.withWatermark("ts", "0 seconds")
         .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
         .as[UserEvent]

@@ -64,6 +64,16 @@ class ScoringServerSpec extends SparkSpec {
     assert(r.body().contains("request body is not valid JSON"), r.body())
   }
 
+  test("unseen PlayType_lag → 400 naming the field and the label, on /api and the form") {
+    val r = post("/api", goldenJson.replace("\"Run\"", "\"Punt\""))
+    assert(r.statusCode() === 400, r.body())
+    assert(r.body().contains("PlayType_lag") && r.body().contains("Punt"), r.body())
+    val form = post("/?n=0", "qtr=3&down=3&TimeSecs=60&yrdline100=50&ydstogo=8" +
+      "&ydsnet=15&month_day=920&posteam=PIT&DefensiveTeam=NE&PlayType_lag=Punt")
+    assert(form.statusCode() === 400, form.body())
+    assert(form.body().contains("PlayType_lag") && form.body().contains("Punt"), form.body())
+  }
+
   test("non-POST → 405; bad replay row → 404; health → ok") {
     assert(get("/api").statusCode() === 405)
     assert(get("/play/99999999").statusCode() === 404)
