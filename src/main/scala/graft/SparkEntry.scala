@@ -3981,17 +3981,18 @@ object SparkEntry {
     * driver SFs, and what covers them beyond: the recursive-closure /
     * O(n²)-pair oracles are DuckDB-intractable past sf0.1, so the
     * generated-SF evidence is an ENGINE-SIDE equality run live by the
-    * named tool (delete path ≡ from-scratch over survivors, diff 0).
+    * named [[tools.ScaleEvidence]] check (delete path ≡ from-scratch
+    * over survivors, diff 0).
     * Written by [[Verify]] as a `scale_evidence.json` sidecar next to
     * `twins.json`, so the correctness artifact — not BASELINE prose —
     * carries the sf1+ coverage story. */
   def scaleEvidence: Map[String, (String, String)] = Map(
-    "q208_cc_retract" -> ("tools.CcRetractScaleCheck",
+    "q208_cc_retract" -> ("tools.ScaleEvidence cc_retract",
       "recursive CC-closure oracle is DuckDB-intractable past sf0.1; ccApplyChanges over the persisted state equals the from-scratch distributed closure at sf1 and sf10, diff 0"),
-    "q210_stream_cc" -> ("tools.CcRetractScaleCheck",
-      "same closure oracle class as q208 (q202's); the per-batch fold is ccIncrementFrames, whose increment ≡ from-scratch equality GraphIncrementSpec pins engine-side and whose delete-capable superset the tool checks live at sf1/sf10"),
-    "q215_dedup_delete" -> ("tools.CorpusRetractScaleCheck",
+    "q210_stream_cc" -> ("tools.ScaleEvidence cc_retract",
+      "same closure oracle class as q208 (q202's); the per-batch fold is ccIncrementFrames, whose increment ≡ from-scratch equality GraphIncrementSpec pins engine-side and whose delete-capable superset the check runs live at sf1/sf10"),
+    "q215_dedup_delete" -> ("tools.ScaleEvidence dedup_delete",
       "shingle-jaccard pair oracle is O(n^2) in DuckDB; dedupApplyDeletes over the persisted full index equals the engine's from-scratch clustering of the survivors at generated SFs, diff 0"),
-    "q216_er_delete" -> ("tools.CorpusRetractScaleCheck",
+    "q216_er_delete" -> ("tools.ScaleEvidence er_delete",
       "within-block levenshtein pair oracle is O(n^2) in DuckDB; erApplyDeletes over the persisted full state equals the engine's from-scratch resolution of the survivors at generated SFs, diff 0"))
 }

@@ -95,12 +95,13 @@ object Dedup {
     * from 8 in round 4) sizes the miss tail for SCALE, not just the
     * fixtures: at the generated sf1's 225k planted near-dup pairs,
     * b=8's 2.8e-4 miss probability at the J=0.8 tail really did drop
-    * 2 pairs (caught by tools.ScaleCheck); at b=16 the expected miss
-    * count stays < 1 up to ~10M borderline pairs. The seeded pipeline
+    * 2 pairs (caught by tools.ScaleEvidence dedup_planted); at b=16
+    * the expected miss count stays < 1 up to ~10M borderline pairs. The seeded pipeline
     * is deterministic and emits exactly the true pair set at every
     * checked SF — which is what the DuckDB oracle (brute-force
     * shingle jaccard) checks, MinHashRecallSpec asserts, and
-    * ScaleCheck extends to generated scale via the planted truth.
+    * ScaleEvidence dedup_planted extends to generated scale via the
+    * planted truth.
     *
     * Shuffle volume: `bands` rows of (bandkey, id) per doc — linear.
     * The ml-lib MinHashLSH variant above stays as the library-level

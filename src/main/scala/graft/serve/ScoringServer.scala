@@ -25,6 +25,8 @@ import java.nio.charset.StandardCharsets
   *    `assets/app_nfl.py:68-71,247-248`).
   *  - GET  /health
   *
+  * A POST body over [[ScoringServer.MaxBody]] bytes gets 413.
+  *
   * Uses the JDK's HttpServer (build.sbt is offline; SURVEY.md §7) and
   * Jackson from Spark's own classpath for JSON.
   */
@@ -45,9 +47,10 @@ final class ScoringServer(scorer: Scorer, replayTable: DataFrame, port: Int = 0)
 
   def boundPort: Int = server.getAddress.getPort
 
-  private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
+  private def respond(ex: HttpExchange, code: Int, body: String,
+      contentType: String = "application/json"): Unit = {
     val bytes = body.getBytes(StandardCharsets.UTF_8)
-    ex.getResponseHeaders.set("Content-Type", "application/json")
+    ex.getResponseHeaders.set("Content-Type", contentType)
     ex.sendResponseHeaders(code, bytes.length)
     ex.getResponseBody.write(bytes)
     ex.close()
@@ -56,30 +59,38 @@ final class ScoringServer(scorer: Scorer, replayTable: DataFrame, port: Int = 0)
   private def err(ex: HttpExchange, code: Int, msg: String): Unit =
     respond(ex, code, s"""{"error":${mapper.writeValueAsString(msg)}}""")
 
+  /** The request body, read up to one byte past [[ScoringServer.MaxBody]]
+    * whether its length is declared or chunked, so an oversized body is
+    * never buffered; past the limit it is a 413 naming the limit. */
+  private def body(ex: HttpExchange): Array[Byte] = {
+    val b = ex.getRequestBody.readNBytes(ScoringServer.MaxBody + 1)
+    if (b.length > ScoringServer.MaxBody) throw new ScoringServer.BodyTooLarge
+    b
+  }
+
+  /** The scoring request from a field lookup: `int` and `str` give a
+    * field's value, or None when it is missing or mistyped, which is a
+    * 400 naming the field. `/api` and the form share it. */
+  private def decode(int: String => Option[Int], str: String => Option[String]): PlayRequest = {
+    def i(n: String): Int = int(n)
+      .getOrElse(throw new IllegalArgumentException(s"missing/invalid int field: $n"))
+    def s(n: String): String = str(n)
+      .getOrElse(throw new IllegalArgumentException(s"missing/invalid string field: $n"))
+    PlayRequest(
+      qtr = i("qtr"), down = i("down"), TimeSecs = i("TimeSecs"),
+      yrdline100 = i("yrdline100"), ydstogo = i("ydstogo"), ydsnet = i("ydsnet"),
+      month_day = i("month_day"), posteam = s("posteam"),
+      DefensiveTeam = s("DefensiveTeam"), PlayType_lag = s("PlayType_lag"))
+  }
+
   private object ApiHandler extends HttpHandler {
     override def handle(ex: HttpExchange): Unit =
       try {
         if (ex.getRequestMethod != "POST") { err(ex, 405, "POST required"); return }
-        val json: JsonNode = mapper.readTree(ex.getRequestBody)
-        def intField(n: String): Int = {
-          val f = json.get(n)
-          if (f == null || !f.canConvertToInt)
-            throw new IllegalArgumentException(s"missing/invalid int field: $n")
-          f.asInt()
-        }
-        def strField(n: String): String = {
-          val f = json.get(n)
-          if (f == null || !f.isTextual)
-            throw new IllegalArgumentException(s"missing/invalid string field: $n")
-          f.asText()
-        }
-        val req = PlayRequest(
-          qtr = intField("qtr"), down = intField("down"),
-          TimeSecs = intField("TimeSecs"), yrdline100 = intField("yrdline100"),
-          ydstogo = intField("ydstogo"), ydsnet = intField("ydsnet"),
-          month_day = intField("month_day"), posteam = strField("posteam"),
-          DefensiveTeam = strField("DefensiveTeam"),
-          PlayType_lag = strField("PlayType_lag"))
+        val json: JsonNode = mapper.readTree(body(ex))
+        def field(n: String): Option[JsonNode] = Option(json.get(n))
+        val req = decode(field(_).filter(_.canConvertToInt).map(_.asInt()),
+          field(_).filter(_.isTextual).map(_.asText()))
         // local fast path: no Spark job per request (same doubles as
         // the transform path, asserted in PlayPipelineSpec)
         val p = scorer.scoreOneFast(req)
@@ -89,6 +100,7 @@ final class ScoringServer(scorer: Scorer, replayTable: DataFrame, port: Int = 0)
       } catch {
         case e: JsonProcessingException =>
           err(ex, 400, s"request body is not valid JSON: ${e.getOriginalMessage}")
+        case e: ScoringServer.BodyTooLarge => err(ex, 413, e.getMessage)
         case e: IllegalArgumentException => err(ex, 400, e.getMessage)
         case e: Exception => err(ex, 500, s"${e.getClass.getSimpleName}: ${e.getMessage}")
       }
@@ -154,14 +166,6 @@ final class ScoringServer(scorer: Scorer, replayTable: DataFrame, port: Int = 0)
          |</body></html>""".stripMargin
     }
 
-    private def respondHtml(ex: HttpExchange, code: Int, body: String): Unit = {
-      val bytes = body.getBytes(StandardCharsets.UTF_8)
-      ex.getResponseHeaders.set("Content-Type", "text/html; charset=utf-8")
-      ex.sendResponseHeaders(code, bytes.length)
-      ex.getResponseBody.write(bytes)
-      ex.close()
-    }
-
     override def handle(ex: HttpExchange): Unit =
       try {
         val path = ex.getRequestURI.getPath
@@ -172,34 +176,24 @@ final class ScoringServer(scorer: Scorer, replayTable: DataFrame, port: Int = 0)
           }.getOrElse(0)
         if (n < 0 || n >= replayRows.length) { err(ex, 404, s"row $n out of range"); return }
         if (ex.getRequestMethod == "POST") {
-          val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-          val form = body.split("&").filter(_.contains("=")).map { kv =>
-            val Array(k, v) = kv.split("=", 2)
-            k -> java.net.URLDecoder.decode(v, "UTF-8")
-          }.toMap
-          def intField(f: String): Int = form.get(f).flatMap(_.toIntOption)
-            .getOrElse(throw new IllegalArgumentException(s"missing/invalid int field: $f"))
-          def strField(f: String): String = form.getOrElse(f,
-            throw new IllegalArgumentException(s"missing string field: $f"))
-          val req = PlayRequest(
-            qtr = intField("qtr"), down = intField("down"),
-            TimeSecs = intField("TimeSecs"), yrdline100 = intField("yrdline100"),
-            ydstogo = intField("ydstogo"), ydsnet = intField("ydsnet"),
-            month_day = intField("month_day"), posteam = strField("posteam"),
-            DefensiveTeam = strField("DefensiveTeam"),
-            PlayType_lag = strField("PlayType_lag"))
-          val p = scorer.scoreOneFast(req)
+          val form = new String(body(ex), StandardCharsets.UTF_8)
+            .split("&").filter(_.contains("=")).map { kv =>
+              val Array(k, v) = kv.split("=", 2)
+              k -> java.net.URLDecoder.decode(v, "UTF-8")
+            }.toMap
+          val p = scorer.scoreOneFast(decode(form.get(_).flatMap(_.toIntOption), form.get))
           // re-render prefilled with the submitted values + the
           // verdict; the page's "next play" anchor (n+1) is the
           // reference's advancing replay cursor (app_nfl.py:269)
-          respondHtml(ex, 200,
-            page(n, form, Some((p.bestPlay, p.passingYards, p.runningYards))))
+          respond(ex, 200, page(n, form,
+            Some((p.bestPlay, p.passingYards, p.runningYards))), ScoringServer.Html)
         } else {
           val prefill = replayRows(n).map { case (k, v) => k -> String.valueOf(v) }
-          respondHtml(ex, 200, page(n, prefill, None))
+          respond(ex, 200, page(n, prefill, None), ScoringServer.Html)
         }
       } catch {
         case _: NumberFormatException => err(ex, 400, "bad row number")
+        case e: ScoringServer.BodyTooLarge => err(ex, 413, e.getMessage)
         case e: IllegalArgumentException => err(ex, 400, e.getMessage)
         case e: Exception => err(ex, 500, s"${e.getClass.getSimpleName}: ${e.getMessage}")
       }
@@ -230,4 +224,14 @@ final class ScoringServer(scorer: Scorer, replayTable: DataFrame, port: Int = 0)
   }
 
   def stop(): Unit = server.stop(0)
+}
+
+object ScoringServer {
+
+  /** The largest request body `/api` or the form accepts, in bytes. */
+  val MaxBody: Int = 64 * 1024
+
+  private val Html = "text/html; charset=utf-8"
+
+  final class BodyTooLarge extends Exception(s"request body exceeds the $MaxBody-byte limit")
 }

@@ -74,6 +74,22 @@ class ScoringServerSpec extends SparkSpec {
     assert(form.body().contains("PlayType_lag") && form.body().contains("Punt"), form.body())
   }
 
+  test("a body over the limit → 413 naming it, declared or chunked, on /api and the form") {
+    val limit = ScoringServer.MaxBody
+    val big = "x" * (limit + 1)
+    val declared = post("/api", big)
+    assert(declared.statusCode() === 413, declared.body())
+    assert(declared.body().contains(limit.toString), declared.body())
+    val chunked = client.send(HttpRequest.newBuilder(URI.create(base + "/?n=0"))
+      .POST(HttpRequest.BodyPublishers.ofInputStream(
+        () => new java.io.ByteArrayInputStream(big.getBytes("UTF-8")))).build(),
+      HttpResponse.BodyHandlers.ofString())
+    assert(chunked.statusCode() === 413, chunked.body())
+    assert(chunked.body().contains(limit.toString), chunked.body())
+    // a body of exactly the limit is read and scored
+    assert(post("/api", goldenJson + " " * (limit - goldenJson.length)).statusCode() === 200)
+  }
+
   test("non-POST → 405; bad replay row → 404; health → ok") {
     assert(get("/api").statusCode() === 405)
     assert(get("/play/99999999").statusCode() === 404)
